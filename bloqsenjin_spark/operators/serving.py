@@ -20,6 +20,8 @@ both as p95_query_sec / p95_serving_sec).
 
 from __future__ import annotations
 
+from itertools import islice
+
 import numpy as np
 
 from bloqsenjin_spark.config import DEFAULT_CONFIG, IndexConfig
@@ -53,6 +55,9 @@ def _page_slice(rows, queries, offsets, k_index: int):
     ]
 
 
+_MISSING = object()
+
+
 class _BoundedLRU(dict):
     """Minimal bounded LRU for the scorer's decoded-block cache: plain dict
     get/set semantics (what functions.scoring.score_shard_blocks expects of
@@ -66,20 +71,30 @@ class _BoundedLRU(dict):
         self.maxsize = maxsize
 
     def get(self, key, default=None):
-        got = super().get(key, default)
-        if got is not default:
-            # dicts preserve insertion order: re-insert = mark recently used
-            del self[key]
-            super().__setitem__(key, got)
+        # dicts preserve insertion order: re-insert = mark recently used.
+        # pop + re-insert rather than get + del: a thread that loses the race
+        # for the same key sees a miss instead of a KeyError, with no lock
+        # on this per-block path.
+        got = self.pop(key, _MISSING)
+        if got is _MISSING:
+            return default
+        super().__setitem__(key, got)
         return got
 
     def __setitem__(self, key, value):
         super().__setitem__(key, value)
-        if len(self) > self.maxsize:
-            # evict oldest entries (front of insertion order)
-            it = iter(self)
-            for k in [next(it) for _ in range(len(self) - self.maxsize)]:
-                del self[k]
+        excess = len(self) - self.maxsize
+        if excess > 0:
+            # evict oldest entries (front of insertion order), lock-free: if
+            # another thread resizes the dict during this pass, this insert
+            # evicts nothing and the next one catches up; pop() tolerates a
+            # key another thread removed first
+            try:
+                oldest = list(islice(self, excess))
+            except RuntimeError:
+                return
+            for k in oldest:
+                self.pop(k, None)
 
 
 def _bounded(cache: "_BoundedLRU", n_rows: int):

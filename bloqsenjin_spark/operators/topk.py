@@ -119,7 +119,7 @@ def bm25_brute_force(docs: DataFrame, queries: DataFrame) -> DataFrame:
     qterm_list = [r["term"] for r in qt.select("term").distinct().collect()]
 
     raw = doc_term_freqs(
-        docs, doc_markers=True, terms=qterm_list or None,
+        docs, doc_markers=True, terms=qterm_list,
     ).where(
         F.col("term").isNull()
         | (F.col("term").isin(qterm_list) if qterm_list else F.lit(False))

@@ -11,6 +11,14 @@ Query-set contract (sources/queries.py): columns/fields
 terms are re-normalized with the engine tokenizer on ingest. Protobuf needs
 the spark-protobuf package on the classpath. Without --queries, runs the
 built-in reference query set.
+
+Python worker daemon: session.get_spark runs Python workers under
+bloqsenjin_spark.worker_daemon, which saves ~250 ms of worker CPU per task
+(see its docstring). The daemon is imported before any task runs, so it
+cannot come from --py-files. Add
+``--conf spark.python.daemon.module=bloqsenjin_spark.worker_daemon`` only
+where the package is installed on the executors (e.g. pip-installed in their
+Python environment); with --py-files alone, keep the stock daemon.
 """
 
 from __future__ import annotations

@@ -73,6 +73,26 @@ def test_zero_hit_and_conjunctive_absent(spark, micro_docs):
     assert res.count() == 0
 
 
+def test_empty_term_batch_ships_only_markers(spark, micro_docs, monkeypatch):
+    """A batch with no query terms pushes the empty allow-set into the scan
+    (markers only), returns no rows and agrees with the NumPy oracle."""
+    from bloqsenjin_spark.operators import postings
+
+    seen = []
+    real = postings.doc_term_freqs
+
+    def spy(*args, **kwargs):
+        seen.append(kwargs.get("terms"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(postings, "doc_term_freqs", spy)
+    qs = [(1, [], "disjunctive", 10), (2, [], "conjunctive", 5)]
+    res = topk.bm25_brute_force(micro_docs, _mk_queries(spark, qs))
+    docs = {r["doc_id"]: r["text"] for r in micro_docs.collect()}
+    assert res.collect() == [] == oracle_topk(docs, qs)
+    assert seen == [[]]
+
+
 def test_sf0001_vs_numpy_oracle(spark):
     docs_df = corpus.load_table(spark, "/root/testdata/sf0.001", "documents")
     docs = {r["doc_id"]: r["text"] for r in docs_df.collect()}

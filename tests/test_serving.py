@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import sys
+import threading
 import time
 
 import pytest
@@ -9,7 +11,7 @@ import pytest
 from bloqsenjin_spark import corpus
 from bloqsenjin_spark.config import IndexConfig
 from bloqsenjin_spark.operators import topk, wand
-from bloqsenjin_spark.operators.serving import IndexServer
+from bloqsenjin_spark.operators.serving import IndexServer, _BoundedLRU
 from bloqsenjin_spark.plans import build as B
 
 CFG = IndexConfig(docs_per_shard=128, block_docs=16)
@@ -1230,3 +1232,38 @@ def test_lazy_edge_cases_from_review(spark, index_dir):
     h1 = lazy._replica_handles["fuzzy"][0]
     lazy.fuzzy_topk_batch([(1, "spork", 1, 3)])
     assert lazy._replica_handles["fuzzy"][0] is h1  # not re-opened
+
+
+def test_bounded_lru_threads_share_keys_without_errors():
+    """Many threads hitting the same keys: a lost race is a miss, never a
+    KeyError or a dict-changed-size error, and every hit is the key's value."""
+    cache = _BoundedLRU(8)
+    errors: list[BaseException] = []
+    bad_hits: list[tuple] = []
+
+    def hammer(seed: int) -> None:
+        try:
+            for i in range(20_000):
+                key = ("t", (i * 7 + seed) % 16, 0)
+                got = cache.get(key)
+                if got is None:
+                    cache[key] = key[1] * 10
+                elif got != key[1] * 10:
+                    bad_hits.append((key, got))
+        except BaseException as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,)) for s in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    assert bad_hits == []
+    assert len(cache) <= cache.maxsize + len(threads)

@@ -9,11 +9,12 @@ Extra args filter which queries run (substring match on the query name).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from bloqsenjin_spark.corpus import TABLES
