@@ -4,9 +4,10 @@ index WITHOUT launching a Spark job.
 A search engine doesn't run a distributed job per query — it serves queries
 from index replicas. This module is that tier: it reads the query terms'
 posting blocks straight from the index files via pyarrow dataset predicate
-pushdown (`term IN (...)` prunes to the relevant row groups, same pruning the
-Spark path gets) and scores with the SAME NumPy kernel as the distributed
-scorer (functions/scoring.py) — rank-identical by construction, pytest-pinned.
+pushdown (`term IN (...)` plus the batch's term range, which row-group
+statistics prune on — see _term_filter) and scores with the SAME NumPy
+kernel as the distributed scorer (functions/scoring.py) — rank-identical
+by construction, pytest-pinned.
 
 Scale shape: one server process owns a doc-range slice of shards (its
 doc_lens arrays fit by construction: docs_per_shard × n_local_shards bytes);
@@ -106,6 +107,18 @@ def _bounded(cache: "_BoundedLRU", n_rows: int):
     return cache if n_rows <= cache.maxsize else None
 
 
+def _term_filter(terms):
+    """pyarrow filter for the rows of ``terms`` (non-empty). ``isin`` alone
+    prunes no row group (pyarrow checks row-group statistics only for
+    comparisons), so the batch's [min, max] term range rides along: on the
+    term-sorted term_stats/postings files the read then decodes only the
+    row groups whose range overlaps the batch."""
+    import pyarrow.dataset as ds
+
+    fld = ds.field("term")
+    return fld.isin(terms) & (fld >= min(terms)) & (fld <= max(terms))
+
+
 class IndexServer:
     """Serve top-k queries from an on-disk index directory (plans/build.py
     layout). Loads stats + doc lengths once; posting blocks are read per query
@@ -162,18 +175,30 @@ class IndexServer:
         self.auto_refresh = auto_refresh
         self.__dict__.update(self._read_state())
 
-    def _read_state(self) -> dict:
+    # attributes derived from index CONTENT (postings, term_stats, doc_lens,
+    # corpus_stats, layout): unchanged while content_generation is, so a
+    # tombstone-only refresh carries them over — the caches included, since
+    # they hold decodes from before any tombstone mask is applied
+    _CONTENT_STATE = (
+        "cfg", "_postings", "_ts_ds", "n_docs", "avgdl", "idf", "df",
+        "_stats_lru", "dls", "_term_cache", "_pos_term_cache",
+        "_block_cache", "_score_block_cache", "_match_block_cache",
+        "_fuzzy_idx",
+    )
+
+    def _read_state(self, prev: "dict | None" = None) -> dict:
         """Load every generation-dependent attribute into a dict — applied
         with ONE __dict__.update so refresh() swaps the whole state (stats,
-        doc_lens, tombstones, fresh empty caches) atomically under the GIL.
-        Per-BATCH consistency comes from _snap(): every public batch method
-        runs on a shallow copy that pins this state for its duration, so a
-        concurrent refresh can never tear an in-flight batch across
-        generations."""
+        doc_lens, tombstones, caches) atomically under the GIL. ``prev``
+        (the current state): when its content_generation is still current,
+        the _CONTENT_STATE attributes are reused as they are and only the
+        tombstone masks are re-read. Per-BATCH consistency comes from
+        _snap(): every public batch method runs on a shallow copy that pins
+        this state for its duration, so a concurrent refresh can never tear
+        an in-flight batch across generations."""
         import pyarrow.dataset as ds
 
         from bloqsenjin_spark.plans.build import (
-            check_index_meta,
             read_index_content_generation,
             read_index_generation,
         )
@@ -188,7 +213,31 @@ class IndexServer:
         # buckets): a replica built before the last CONTENT mutation must
         # not silently serve old rows (_doc_store_ds / _fuzzy_handle)
         st["content_generation"] = read_index_content_generation(index_dir)
-        st["cfg"] = cfg = check_index_meta(index_dir, self._cfg_arg)
+        if prev is not None and (
+                prev["content_generation"] == st["content_generation"]):
+            st.update((k, prev[k]) for k in self._CONTENT_STATE)
+        else:
+            st.update(self._read_content(ds))
+        # replica dataset handles (doc store, fuzzy buckets, facets, IVF),
+        # lazily opened ONCE per generation — replica writes bump only the
+        # generation, so even a tombstone-only refresh drops them. A shared
+        # MUTABLE dict — _snap() batches are shallow copies, so rebinding an
+        # attribute on the copy would throw the handle away and re-open +
+        # re-staleness-check parquet on every batch; mutating this dict
+        # persists to the parent (same mechanism as the LRU caches)
+        st["_replica_handles"] = {}
+        st["tomb_masks"] = self._read_tomb_masks(ds, st["cfg"].docs_per_shard)
+        return st
+
+    def _read_content(self, ds) -> dict:
+        """The _CONTENT_STATE attributes, read from the index files."""
+        from collections import OrderedDict
+
+        from bloqsenjin_spark.plans.build import check_index_meta
+
+        index_dir = self.index_dir
+        st: dict = {}
+        st["cfg"] = check_index_meta(index_dir, self._cfg_arg)
         st["_postings"] = ds.dataset(f"{index_dir}/postings", format="parquet",
                                      partitioning="hive")
         cs = ds.dataset(f"{index_dir}/corpus_stats", format="parquet").to_table().to_pydict()
@@ -207,16 +256,7 @@ class IndexServer:
             # a bounded LRU backed by row-group-pruned term_stats reads
             st["idf"] = None
             st["df"] = None
-            from collections import OrderedDict as _OD
-
-            st["_stats_lru"] = _OD()
-        # replica dataset handles (doc store, fuzzy buckets), lazily opened
-        # ONCE per generation. A shared MUTABLE dict — _snap() batches are
-        # shallow copies, so rebinding an attribute on the copy would throw
-        # the handle away and re-open + re-staleness-check parquet on every
-        # batch; mutating this dict persists to the parent (same mechanism
-        # as _fuzzy_idx / the LRU caches)
-        st["_replica_handles"] = {}
+            st["_stats_lru"] = OrderedDict()
         dl = ds.dataset(f"{index_dir}/doc_lens", format="parquet",
                         partitioning="hive").to_table().to_pydict()
         owned = self._owned
@@ -225,32 +265,12 @@ class IndexServer:
             for s, b in zip(dl["shard"], dl["dls"])
             if owned is None or int(s) in owned
         }
-        # logical deletes (LSM tombstones) — per-SHARD boolean masks, the
-        # serving-side form of plans.deletes.tombstone_bitmap_df: a server
-        # owning a doc-range slice holds only its own shards' masks (same
-        # bound as its doc_lens arrays), masked before top-k selection
-        tomb_masks: dict[int, np.ndarray] = {}
-        dps = cfg.docs_per_shard
-        try:
-            tt = ds.dataset(f"{index_dir}/tombstones", format="parquet").to_table()
-            ids = np.unique(
-                np.asarray(tt.column("doc_id").to_pylist(), dtype=np.int64))
-            for s in np.unique(ids // dps):
-                if owned is not None and int(s) not in owned:
-                    continue
-                m = np.zeros(dps, dtype=bool)
-                m[ids[ids // dps == s] - s * dps] = True
-                tomb_masks[int(s)] = m
-        except FileNotFoundError:
-            pass
-        st["tomb_masks"] = tomb_masks
-        from collections import OrderedDict
-
         # LRU caches, bounded so a long-lived server over a web-scale
         # vocabulary can't grow without limit: per-term posting rows for the
         # BM25 path and (separately, positional columns) for the phrase path,
         # plus decoded positional blocks reused across phrase_batch calls.
-        # Rebuilt empty on refresh: cached rows belong to the old generation.
+        # Rebuilt empty when the content changes: cached rows belong to the
+        # old bytes.
         st["_term_cache"] = OrderedDict() if self._cache_terms else None
         st["_pos_term_cache"] = OrderedDict() if self._cache_terms else None
         st["_block_cache"] = OrderedDict()
@@ -258,29 +278,65 @@ class IndexServer:
         # match-core twin (bare doc-id arrays for count/facet batches) —
         # a separate mapping from the scorer's (ids, tfs) entries
         st["_match_block_cache"] = _BoundedLRU(self.max_cached_score_blocks)
-        # SymSpell deletion-neighborhood indexes, built lazily per distinct
-        # max_dist on first fuzzy query of a generation (shared by snapshots;
-        # refresh() drops them with the rest of the state)
+        # SymSpell deletion-neighborhood indexes over the eager df dict,
+        # built lazily per distinct max_dist on first fuzzy query (shared
+        # by snapshots; derived from the dictionary alone, so they live as
+        # long as it does)
         st["_fuzzy_idx"] = {}
         return st
+
+    def _read_tomb_masks(self, ds, dps: int) -> "dict[int, np.ndarray]":
+        """Logical deletes (LSM tombstones) — per-SHARD boolean masks, the
+        serving-side form of plans.deletes.tombstone_bitmap_df: a server
+        owning a doc-range slice holds only its own shards' masks (same
+        bound as its doc_lens arrays), masked before top-k selection."""
+        try:
+            tds = ds.dataset(f"{self.index_dir}/tombstones", format="parquet")
+        except FileNotFoundError:
+            return {}
+        if "doc_id" not in tds.schema.names:
+            return {}  # nothing but hidden (in-flight or leftover) files
+        ids = np.unique(
+            tds.to_table(columns=["doc_id"]).column("doc_id").to_numpy())
+        masks: dict[int, np.ndarray] = {}
+        for s in np.unique(ids // dps):
+            if self._owned is not None and int(s) not in self._owned:
+                continue
+            m = np.zeros(dps, dtype=bool)
+            m[ids[ids // dps == s] - s * dps] = True
+            masks[int(s)] = m
+        return masks
 
     def refresh(self, force: bool = False) -> bool:
         """Pick up a new index generation (build resume, streaming compact,
         delete, purge — anything that rewrote index_meta): one tiny
-        generation read; on change, reload stats/doc_lens/tombstones and
-        invalidate every cache in a single atomic state swap. Returns True
-        iff a reload happened. Until refresh() is called the server keeps
-        serving its loaded generation — never a torn mix of two (append-only
-        mutations like logical deletes leave even cold reads consistent;
-        destructive rewrites like purge/compact require refresh before
-        further cold reads since the old files are gone). This is the
-        non-pathological version of the reference's re-init-per-request
+        generation read; on change, reload in a single atomic state swap.
+        Returns True iff a reload happened.
+
+        What a reload reads depends on what changed. When the index CONTENT
+        is unchanged (same content_generation: a logical delete, or an
+        opt-in replica write), the refresh re-reads only the tombstone
+        masks and drops the replica handles; config, dataset handles,
+        corpus stats, the idf/df dicts or lazy stats LRU, doc lengths and
+        every decoded-block/term cache carry over — tombstones are applied
+        after the cache lookups, and scores keep their build-time stats
+        until a purge. A content change (build, resume, purge, compact, IVF
+        append) reloads everything with fresh caches, and so does
+        ``force=True``.
+
+        Until refresh() is called the server keeps serving its loaded
+        generation — never a torn mix of two (append-only mutations like
+        logical deletes leave even cold reads consistent; destructive
+        rewrites like purge/compact require refresh before further cold
+        reads since the old files are gone). This is the non-pathological
+        version of the reference's re-init-per-request
         (/root/reference/pkg/rest/http/server.go:16-35)."""
         from bloqsenjin_spark.plans.build import read_index_generation
 
         if not force and read_index_generation(self.index_dir) == self.generation:
             return False
-        self.__dict__.update(self._read_state())
+        self.__dict__.update(
+            self._read_state(None if force else self.__dict__))
         return True
 
     def _snap(self) -> "IndexServer":
@@ -291,7 +347,8 @@ class IndexServer:
         while the in-flight batch keeps its consistent snapshot, so no batch
         ever mixes two generations (including prefix/fuzzy expansion, which
         reads the dictionary before scoring). Caches are shared by reference
-        until a refresh replaces them, so warm-cache benefits persist."""
+        until a content refresh replaces them, so warm-cache benefits
+        persist."""
         import copy
 
         if self.auto_refresh:
@@ -340,7 +397,7 @@ class IndexServer:
             return {k: [] for k in cols}
         need = [t for t in terms if cache is None or t not in cache]
         if need:
-            flt = self._ds.field("term").isin(need)
+            flt = _term_filter(need)
             if self._owned is not None:
                 flt = flt & self._ds.field("shard").isin(sorted(self._owned))
             tbl = self._postings.to_table(
@@ -388,7 +445,7 @@ class IndexServer:
                 need.append(t)
         if need:
             tbl = self._ts_ds.to_table(
-                filter=self._ds.field("term").isin(need),
+                filter=_term_filter(need),
                 columns=["term", "df", "idf"],
             ).to_pydict()
             for t, dfv, idfv in zip(tbl["term"], tbl["df"], tbl["idf"]):
@@ -1791,31 +1848,48 @@ class FieldedIndexServer:
             IndexServer(doc_stats_dir, cfg, **kw) if doc_stats_dir else None
         )
         # decoded-block LRU across fielded batches (keys are composite
-        # field⟂term, so entries are unique per field replica); dropped
-        # whenever any field picks up a new generation
-        self._score_block_cache = _BoundedLRU(
-            next(iter(self.servers.values())).max_cached_score_blocks)
+        # field⟂term, so entries are unique per field replica), bound to
+        # the per-field content_generation tuple it was filled under
+        self._score_cache = (self._content_key(self.servers), _BoundedLRU(
+            self.servers[self.fields[0]].max_cached_score_blocks))
 
     _SEP = "\x00"  # same composite-key separator as operators/fielded.py
 
+    @property
+    def _score_block_cache(self) -> "_BoundedLRU":
+        return self._score_cache[1]
+
     def refresh(self, force: bool = False) -> bool:
+        """Refresh every per-field server (and the doc-stats server). The
+        decoded-block cache is rebound by _cache_for the next time a batch
+        sees a new content generation; ``force=True`` rebinds it here, like
+        the full reload it forces on every field."""
         out = any([s.refresh(force) for s in self.servers.values()])
         if self._doc_stats is not None:
             out = self._doc_stats.refresh(force) or out
-        if out:
-            self._score_block_cache.clear()
+        if force:
+            self._score_cache = (self._content_key(self.servers),
+                                 _BoundedLRU(self._score_block_cache.maxsize))
         return out
 
+    def _content_key(self, servers) -> tuple:
+        return tuple(servers[f].content_generation for f in self.fields)
+
     def _cache_for(self, snaps) -> "_BoundedLRU":
-        """The decoded-block cache, VALIDATED against this batch's per-field
-        generations — a per-field server refreshed behind our back (its own
-        auto_refresh, or a direct .refresh() call) invalidates every cached
-        decode, so stale blobs can never serve a new generation."""
-        gens = tuple(snaps[f].generation for f in self.fields)
-        if gens != getattr(self, "_score_cache_gens", None):
-            self._score_block_cache.clear()
-            self._score_cache_gens = gens
-        return self._score_block_cache
+        """The decoded-block cache for this batch's per-field CONTENT
+        generations. A new tuple (any field's content changed — through
+        refresh(), or a field server's own auto_refresh) binds a FRESH
+        cache in one atomic assignment; nothing is cleared in place, so an
+        in-flight batch of the old generation keeps filling its own,
+        now orphaned, cache and can never leak old decodes into the new
+        one. A tombstone-only refresh keeps the tuple, hence the cache:
+        masks apply after the cache lookup."""
+        key = self._content_key(snaps)
+        got_key, cache = self._score_cache
+        if key != got_key:
+            cache = _BoundedLRU(cache.maxsize)
+            self._score_cache = (key, cache)
+        return cache
 
     def _validate(self, queries, field_weights):
         if len({int(q[0]) for q in queries}) != len(queries):

@@ -247,6 +247,9 @@ def write_fuzzy_index(
                    extra={"max_dist": int(max_dist)})
 
 
+_META_FILE = "part-00000.parquet"  # the parquet backend's one meta file
+
+
 def write_index_meta(spark: SparkSession, index_dir: str, cfg: IndexConfig,
                      content: bool = True) -> None:
     """Persist the layout-defining config WITH the index: decoding with a
@@ -268,29 +271,63 @@ def write_index_meta(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     compact or rebuild instead of silently serving old rows
     (IndexServer._doc_store_ds / _fuzzy_handle; ops: stale_replicas).
 
+    COMMIT: on parquet paths the row is written session-free with pyarrow
+    (no Spark job — a logical delete's whole commit is two small local
+    file writes) as ONE file, ``index_meta/part-00000.parquet``, replaced
+    atomically (temp file + ``os.replace``, plans.store.commit_parquet_file);
+    any other file left in ``index_meta/`` (a Spark-era meta write's parts
+    and markers, a crashed writer's temp file) is removed after the
+    replace. A cold read therefore never sees a missing or partial meta
+    row on either backend — on Iceberg the overwrite is a snapshot commit.
+    (Only the first write over a Spark-era meta leaves a moment where the
+    old part and the new file are both listed; the layout columns agree,
+    and a reader that takes the old generation just refreshes again.)
+
     SINGLE-WRITER CONTRACT: the bump is a read-modify-write (read generation,
-    +1, overwrite in place) — two CONCURRENT writers can mint the same
-    generation, making a server miss one of the two mutations on refresh,
-    and a cold read racing the parquet overwrite can briefly see a
-    missing/partial meta table. Index mutations are already serialized in
-    this engine (one build/delete/purge job owns an index at a time — the
-    same discipline every LSM/segment store requires of its commit log); on
-    the Iceberg backend the overwrite is a snapshot commit and the torn-read
-    half of the caveat disappears. Readers mitigate the remaining race by
-    reading the generation BEFORE the tables (see IndexServer._read_state:
-    a mid-load commit makes the snapshot look older, forcing a re-refresh —
+    +1, replace) — two CONCURRENT writers can mint the same generation,
+    making a server miss one of the two mutations on refresh. Index
+    mutations are already serialized in this engine (one
+    build/delete/purge job owns an index at a time — the same discipline
+    every LSM/segment store requires of its commit log). Readers read the
+    generation BEFORE the tables (see IndexServer._read_state: a mid-load
+    commit makes the snapshot look older, forcing a re-refresh —
     conservative, never stale-forever)."""
     gen = read_index_generation(index_dir) + 1
     content_gen = gen if content else read_index_content_generation(index_dir)
-    S.for_index(spark, index_dir).overwrite(
-        spark.createDataFrame(
-            [(cfg.docs_per_shard, cfg.block_docs, cfg.k1, cfg.b,
-              cfg.positions, gen, content_gen)],
-            "docs_per_shard int, block_docs int, k1 double, b double, "
-            "positions boolean, generation long, content_generation long",
-        ),
-        "index_meta",
-    )
+    if index_dir.startswith(S.ICEBERG_SCHEME):
+        S.for_index(spark, index_dir).overwrite(
+            spark.createDataFrame(
+                [(cfg.docs_per_shard, cfg.block_docs, cfg.k1, cfg.b,
+                  cfg.positions, gen, content_gen)],
+                "docs_per_shard int, block_docs int, k1 double, b double, "
+                "positions boolean, generation long, content_generation long",
+            ),
+            "index_meta",
+        )
+        return
+    import os
+    import shutil
+
+    import pyarrow as pa
+
+    row = pa.table({
+        "docs_per_shard": pa.array([cfg.docs_per_shard], pa.int32()),
+        "block_docs": pa.array([cfg.block_docs], pa.int32()),
+        "k1": pa.array([cfg.k1], pa.float64()),
+        "b": pa.array([cfg.b], pa.float64()),
+        "positions": pa.array([cfg.positions], pa.bool_()),
+        "generation": pa.array([gen], pa.int64()),
+        "content_generation": pa.array([content_gen], pa.int64()),
+    })
+    meta_dir = f"{index_dir}/index_meta"
+    S.commit_parquet_file(row, meta_dir, _META_FILE)
+    for name in os.listdir(meta_dir):
+        if name != _META_FILE:
+            path = os.path.join(meta_dir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                os.remove(path)
 
 
 def read_index_content_generation(index_dir: str) -> int:

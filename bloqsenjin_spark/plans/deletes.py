@@ -5,6 +5,11 @@
    Query paths (operators/wand.py, operators/serving.py) mask tombstoned docs
    BEFORE top-k selection. Scores of surviving docs keep the build-time stats
    (N, df, avgdl) until a purge — the standard deferred-delete contract.
+   The append is session-free on the parquet backend: one pyarrow-written
+   file per call, published by atomic rename, plus the index_meta stamp —
+   no Spark job, so a delete is visible to a refreshed server in
+   milliseconds. Because postings, block-max and stats do not change, that
+   refresh re-reads only the tombstone masks (IndexServer.refresh).
 2. ``purge_deletes`` — physical: rewrite ONLY the affected doc-range shards
    without tombstoned postings, recompute global stats exactly
    (df/cf decremented by decoding the deleted docs' own postings — no corpus
@@ -47,14 +52,48 @@ def _parquet_only(index_dir: str) -> None:
         )
 
 
+def _check_doc_ids(doc_ids) -> list[int]:
+    """Validated doc ids, or ValueError before anything is written: a bool,
+    a non-integer or a negative id is refused (a negative id would land in
+    tombstone "shard -1" and mask nothing)."""
+    import numbers
+
+    ids = list(doc_ids)
+    bad = [d for d in ids
+           if isinstance(d, (bool, np.bool_))
+           or not isinstance(d, numbers.Integral) or d < 0]
+    if bad:
+        raise ValueError(
+            f"delete_docs takes non-negative integer doc ids; got {bad[:5]!r}"
+        )
+    return [int(d) for d in ids]
+
+
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> None:
     """Logical delete: append tombstones (idempotent — duplicates tolerated,
     readers dedupe). Bumps the index generation — a logical delete changes
-    query results, so long-lived servers must see it as a new generation."""
+    query results, so long-lived servers must see it as a new generation.
+
+    Starts no Spark job: the ids land as ONE new parquet file in
+    ``tombstones/`` (``doc_id int64``, the column every Spark reader of the
+    log expects), committed atomically by plans.store.commit_parquet_file,
+    and the meta stamp is write_index_meta's session-free parquet commit.
+    An empty ``doc_ids`` writes nothing and bumps nothing; a bool,
+    non-integer or negative id raises ValueError before any write."""
+    import uuid
+
+    import pyarrow as pa
+
+    from bloqsenjin_spark.plans.store import commit_parquet_file
+
     _parquet_only(index_dir)
-    spark.createDataFrame(
-        [(int(d),) for d in doc_ids], "doc_id long"
-    ).write.mode("append").parquet(f"{index_dir}/tombstones")
+    ids = _check_doc_ids(doc_ids)
+    if not ids:
+        return
+    commit_parquet_file(
+        pa.table({"doc_id": pa.array(ids, pa.int64())}),
+        f"{index_dir}/tombstones", f"part-{uuid.uuid4().hex}.parquet",
+    )
     try:
         # content=False: tombstones mask at query time in every path (incl.
         # snippet/fuzzy serving), so opt-in replicas stay valid — only

@@ -1,7 +1,9 @@
 """Index storage backends — the writer/reader seam of the build plan.
 
 The index is five tables (postings, doc_lens, term_stats, corpus_stats,
-checkpoints) plus index_meta. Two backends implement the same small surface:
+checkpoints) plus index_meta. Two backends implement the same small surface
+(``commit_parquet_file`` is the parquet backend's session-free commit for
+the one-row meta and the tombstone log):
 
 * ``ParquetStore`` — path-based parquet directories. Per-shard idempotence
   comes from dynamic partition overwrite; checkpoint upsert is append +
@@ -37,6 +39,29 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:  # noqa: BLE001 — class not on the classpath
         return False
+
+
+def commit_parquet_file(table, directory: str, name: str) -> None:
+    """Write a pyarrow ``table`` as ``directory/name`` without a Spark job,
+    atomically: the bytes go to a dot-prefixed temp file (pyarrow datasets
+    and Spark's file listing both skip dot-prefixed names, so no reader
+    sees a partial file), then ``os.replace`` publishes it under its final
+    name. Local-filesystem parquet paths only, like the rest of the
+    parquet backend's in-place swaps (plans/deletes.purge_deletes)."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".tmp-{uuid.uuid4().hex}.parquet")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(directory, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def for_index(spark: SparkSession, index_dir: str):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -281,3 +282,139 @@ def test_or_bitmap_maps_length_mismatch_raises(spark):
     b = spark.createDataFrame([(0, bytes(8))], "shard int, tomb binary")
     with pytest.raises(Exception, match="bitmap length mismatch"):
         or_bitmap_maps(a, b).collect()
+
+
+def test_delete_docs_starts_no_spark_job(spark, built):
+    """A logical delete is two session-free parquet commits (tombstone file
+    + index_meta) — no Spark job — and Spark-era tombstone parts keep being
+    read next to the pyarrow-written ones by every reader."""
+    import os
+
+    d, _ = built
+    # a tombstone part as the Spark-job writer used to append it
+    spark.createDataFrame([(0,), (5,)], "doc_id long").write.mode(
+        "append").parquet(f"{d}/tombstones")
+    gen = B.read_index_generation(d)
+    sc = spark.sparkContext
+    sc.setJobGroup("delete-no-job", "delete_docs must not start a job")
+    try:
+        D.delete_docs(spark, d, [130, 131, 340, 499])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("delete-no-job") == []
+    assert B.read_index_generation(d) == gen + 1
+    assert sorted(os.listdir(f"{d}/index_meta")) == ["part-00000.parquet"]
+
+    assert D.load_tombstones(spark, d) == set(DELETED)
+    tomb_map = D.tombstone_bitmap_df(spark, d, CFG)
+    assert {r["shard"] for r in tomb_map.collect()} == {x // 128 for x in DELETED}
+    srv = IndexServer(d)
+    assert {s: set(np.flatnonzero(m) + s * 128)
+            for s, m in srv.tomb_masks.items()} == {
+        s: {x for x in DELETED if x // 128 == s} for s in {0, 1, 2, 3}}
+
+
+def test_delete_docs_refuses_bad_ids_and_skips_empty(spark, built):
+    """Empty input writes and bumps nothing; a bool, non-integer or negative
+    id raises before anything is written."""
+    import os
+
+    d, _ = built
+    gen = B.read_index_generation(d)
+    D.delete_docs(spark, d, [])
+    assert B.read_index_generation(d) == gen
+    assert not os.path.exists(f"{d}/tombstones")
+    for bad in ([True], [3, 1.0], [-1], [7, "9"], [None]):
+        with pytest.raises(ValueError, match="non-negative integer"):
+            D.delete_docs(spark, d, bad)
+    assert B.read_index_generation(d) == gen
+    assert not os.path.exists(f"{d}/tombstones")
+    D.delete_docs(spark, d, [np.int64(5), 0])  # NumPy ints are ids too
+    assert D.load_tombstones(spark, d) == {0, 5}
+
+
+def test_leftover_temp_files_are_ignored(spark, built):
+    """A crashed commit's dot-prefixed temp file is invisible to the server,
+    the Spark tombstone reader and the meta reader — alongside committed
+    files, and on its own."""
+    import os
+
+    d, _ = built
+    junk = b"not parquet: a writer died before the rename"
+    os.makedirs(f"{d}/tombstones")
+    with open(f"{d}/tombstones/.tmp-dead.parquet", "wb") as f:
+        f.write(junk)
+    # only a temp file: no deletes anywhere
+    assert IndexServer(d).tomb_masks == {}
+    assert D.tombstone_bitmap_df(spark, d, CFG) is None
+    assert D.load_tombstones(spark, d) == set()
+
+    gen = B.read_index_generation(d)
+    D.delete_docs(spark, d, DELETED)
+    with open(f"{d}/index_meta/.tmp-dead.parquet", "wb") as f:
+        f.write(junk)
+    assert B.read_index_meta(d) == CFG
+    assert B.read_index_generation(d) == gen + 1
+    srv = IndexServer(d)
+    assert sorted(int(x) for s, m in srv.tomb_masks.items()
+                  for x in np.flatnonzero(m) + s * 128) == sorted(DELETED)
+    tomb_map = D.tombstone_bitmap_df(spark, d, CFG)
+    assert {r["shard"] for r in tomb_map.collect()} == {x // 128 for x in DELETED}
+
+
+def test_legacy_spark_index_meta_replaced_by_one_file(spark, built):
+    """A Spark-written index_meta (part files, _SUCCESS, .crc sidecars)
+    holds exactly one file after the next meta write, and the generation
+    continues from the legacy value."""
+    import os
+
+    d, _ = built
+    spark.createDataFrame(
+        [(CFG.docs_per_shard, CFG.block_docs, CFG.k1, CFG.b, False, 41, 40)],
+        "docs_per_shard int, block_docs int, k1 double, b double, "
+        "positions boolean, generation long, content_generation long",
+    ).write.mode("overwrite").parquet(f"{d}/index_meta")
+    assert len(os.listdir(f"{d}/index_meta")) > 1
+    D.delete_docs(spark, d, [5])
+    assert os.listdir(f"{d}/index_meta") == ["part-00000.parquet"]
+    assert B.read_index_generation(d) == 42
+    assert B.read_index_content_generation(d) == 40
+    assert B.read_index_meta(d) == CFG
+
+
+def _all_answers(srv):
+    return (srv.query_batch(corpus.REFERENCE_QUERIES),
+            srv.count_batch(corpus.REFERENCE_QUERIES))
+
+
+@pytest.mark.parametrize("stats_mode", ["eager", "lazy"])
+def test_refresh_after_delete_reuses_content_state(spark, built, stats_mode):
+    """A tombstone-only refresh keeps the content state (stats, doc
+    lengths, decoded-block caches) and re-reads only the masks; its answers
+    equal a fresh server's. A purge changes content: everything reloads."""
+    d, _ = built
+    srv = IndexServer(d, stats_mode=stats_mode)
+    before = _all_answers(srv)
+    assert len(srv._score_block_cache) > 0
+    kept = (srv.idf, srv._stats_lru, srv.dls, srv._score_block_cache,
+            srv._match_block_cache, srv._term_cache)
+
+    D.delete_docs(spark, d, DELETED)
+    assert srv.refresh()
+    assert all(a is b for a, b in zip(
+        (srv.idf, srv._stats_lru, srv.dls, srv._score_block_cache,
+         srv._match_block_cache, srv._term_cache), kept))
+    after = _all_answers(srv)
+    assert after != before
+    assert after == _all_answers(IndexServer(d, stats_mode=stats_mode))
+    assert not {r[2] for r in after[0]} & set(DELETED)
+
+    D.purge_deletes(spark, d)
+    assert srv.refresh()
+    assert srv.dls is not kept[2]
+    assert srv._score_block_cache is not kept[3]
+    if stats_mode == "eager":
+        assert srv.idf is not kept[0]
+    else:
+        assert srv._stats_lru is not kept[1]
+    assert _all_answers(srv) == _all_answers(IndexServer(d, stats_mode=stats_mode))

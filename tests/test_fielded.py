@@ -1061,3 +1061,44 @@ def test_fielded_score_cache_invalidates_on_field_refresh(spark, tmp_path):
     after = srv.query_batch(q, {"all": 1.0})
     assert after != before  # new generation served, not stale cache
     assert not ({doc for _q, _r, doc, _s in after} & set(victims))
+
+
+def test_fielded_score_cache_keyed_on_content_generation(spark, tmp_path):
+    """The fielded decoded-block cache is bound to the per-field
+    content_generation tuple: a plain delete keeps the same cache object
+    (masks apply after the lookup) and the victims still vanish; a purge
+    binds a NEW object, and inserts into the old one (an in-flight batch of
+    the old generation) never reach it."""
+    from pyspark.sql import functions as SF
+
+    from bloqsenjin_spark.operators.serving import FieldedIndexServer
+    from bloqsenjin_spark.plans import build as B
+    from bloqsenjin_spark.plans import deletes as D
+
+    docs = corpus.load_table(spark, "/root/testdata/sf0.001", "documents")
+    d = str(tmp_path / "keyed_field")
+    B.build_index_resumable(docs.select("doc_id", SF.col("text")), d, CFG)
+    srv = FieldedIndexServer({"all": d}, CFG)
+    q = [(1, ["the", "fast"], "disjunctive", 8)]
+    before = srv.query_batch(q, {"all": 1.0})
+    old = srv._score_block_cache
+    assert len(old) > 0
+
+    victims = sorted({doc for _q, _r, doc, _s in before})[:3]
+    D.delete_docs(spark, d, victims)
+    assert srv.refresh()
+    after = srv.query_batch(q, {"all": 1.0})
+    assert srv._score_block_cache is old
+    assert not ({doc for _q, _r, doc, _s in after} & set(victims))
+    assert after == FieldedIndexServer({"all": d}, CFG).query_batch(
+        q, {"all": 1.0})
+
+    D.purge_deletes(spark, d)
+    assert srv.refresh()
+    purged = srv.query_batch(q, {"all": 1.0})
+    new = srv._score_block_cache
+    assert new is not old and len(new) > 0
+    old[("stale", 0, 0)] = "old-generation decode"
+    assert ("stale", 0, 0) not in srv._score_block_cache
+    assert srv.query_batch(q, {"all": 1.0}) == purged == FieldedIndexServer(
+        {"all": d}, CFG).query_batch(q, {"all": 1.0})

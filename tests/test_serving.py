@@ -1267,3 +1267,26 @@ def test_bounded_lru_threads_share_keys_without_errors():
     assert errors == []
     assert bad_hits == []
     assert len(cache) <= cache.maxsize + len(threads)
+
+
+def test_term_filter_prunes_row_groups(tmp_path):
+    """``term IN (...)`` alone keeps every row group of a term-sorted file
+    (pyarrow prunes on comparisons only); the serving reads' filter adds the
+    batch's term range and keeps just the overlapping groups, with the same
+    rows."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from bloqsenjin_spark.operators.serving import _term_filter
+
+    terms = [f"t{i:05d}" for i in range(4096)]
+    pq.write_table(pa.table({"term": terms, "df": list(range(4096))}),
+                   str(tmp_path / "ts.parquet"), row_group_size=256)
+    frag = next(iter(ds.dataset(str(tmp_path / "ts.parquet")).get_fragments()))
+    want = ["t00300", "t00301", "t00700", "absent"]
+    assert frag.metadata.num_row_groups == 16
+    assert len(frag.split_by_row_group(ds.field("term").isin(want))) == 16
+    assert len(frag.split_by_row_group(_term_filter(want))) == 3
+    got = frag.to_table(filter=_term_filter(want)).to_pydict()
+    assert got["term"] == ["t00300", "t00301", "t00700"]
