@@ -3,11 +3,11 @@ index WITHOUT launching a Spark job.
 
 A search engine doesn't run a distributed job per query — it serves queries
 from index replicas. This module is that tier: it reads the query terms'
-posting blocks straight from the index files via pyarrow dataset predicate
-pushdown (`term IN (...)` plus the batch's term range, which row-group
-statistics prune on — see _term_filter) and scores with the SAME NumPy
-kernel as the distributed scorer (functions/scoring.py) — rank-identical
-by construction, pytest-pinned.
+posting blocks straight from the term-sorted postings files — row groups
+picked by their footer term range, decoded once while cached, a term's
+rows found through the row group's term dictionary (_PostingsReader) —
+and scores with the SAME NumPy kernel as the distributed scorer
+(functions/scoring.py) — rank-identical by construction, pytest-pinned.
 
 Scale shape: one server process owns a doc-range slice of shards (its
 doc_lens arrays fit by construction: docs_per_shard × n_local_shards bytes);
@@ -21,6 +21,10 @@ both as p95_query_sec / p95_serving_sec).
 
 from __future__ import annotations
 
+import os
+import threading
+from array import array
+from bisect import bisect_left, bisect_right
 from itertools import islice
 
 import numpy as np
@@ -60,18 +64,33 @@ _MISSING = object()
 
 
 class _BoundedLRU(dict):
-    """Minimal bounded LRU for the scorer's decoded-block cache: plain dict
-    get/set semantics (what functions.scoring.score_shard_blocks expects of
-    its ``decode_cache``), recency tracked by re-insertion, eviction on
-    insert. Shared MUTABLY by _snap() copies like the other serving caches
-    (a snapshot warming the cache warms the server — same generation, same
-    bytes)."""
+    """Minimal bounded LRU for the serving caches (the scorer's and match
+    core's decoded blocks, per-term posting rows, decoded row groups): plain
+    dict get/set semantics (what functions.scoring.score_shard_blocks
+    expects of its ``decode_cache``), recency tracked by re-insertion,
+    eviction on insert. Shared MUTABLY by _snap() copies (a snapshot warming
+    the cache warms the server — same generation, same bytes).
 
-    def __init__(self, maxsize: int):
+    ``sizeof``: optional entry → cost function (e.g. decoded bytes); the
+    cache then keeps the summed cost of its entries, ``size``, at most
+    ``maxsize`` instead of counting entries. That mode serves few, large
+    entries (decoded row groups, read once per term-cache miss), so it
+    takes a lock and keeps ``size`` exact."""
+
+    def __init__(self, maxsize: int, sizeof=None):
         super().__init__()
         self.maxsize = maxsize
+        self._sizeof = sizeof
+        self.size = 0
+        self._lock = threading.Lock() if sizeof is not None else None
 
     def get(self, key, default=None):
+        if self._lock is not None:
+            with self._lock:
+                return self._get(key, default)
+        return self._get(key, default)
+
+    def _get(self, key, default):
         # dicts preserve insertion order: re-insert = mark recently used.
         # pop + re-insert rather than get + del: a thread that loses the race
         # for the same key sees a miss instead of a KeyError, with no lock
@@ -83,6 +102,16 @@ class _BoundedLRU(dict):
         return got
 
     def __setitem__(self, key, value):
+        if self._lock is not None:
+            with self._lock:
+                old = self.pop(key, _MISSING)
+                if old is not _MISSING:
+                    self.size -= self._sizeof(old)
+                super().__setitem__(key, value)
+                self.size += self._sizeof(value)
+                while self.size > self.maxsize:
+                    self.size -= self._sizeof(self.pop(next(iter(self))))
+            return
         super().__setitem__(key, value)
         excess = len(self) - self.maxsize
         if excess > 0:
@@ -111,7 +140,7 @@ def _term_filter(terms):
     """pyarrow filter for the rows of ``terms`` (non-empty). ``isin`` alone
     prunes no row group (pyarrow checks row-group statistics only for
     comparisons), so the batch's [min, max] term range rides along: on the
-    term-sorted term_stats/postings files the read then decodes only the
+    term-sorted term_stats files the lazy-stats read then decodes only the
     row groups whose range overlaps the batch."""
     import pyarrow.dataset as ds
 
@@ -119,10 +148,252 @@ def _term_filter(terms):
     return fld.isin(terms) & (fld >= min(terms)) & (fld <= max(terms))
 
 
+def _data_files(root: str) -> frozenset:
+    """Relative paths of the files a pyarrow dataset at ``root`` reads:
+    names starting with "." or "_" (in-flight commit temp files, Spark's
+    markers and checksums) are skipped at every level; no directory = no
+    files."""
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        rel = os.path.relpath(d, root)
+        out.extend(os.path.normpath(os.path.join(rel, f)) for f in files
+                   if not f.startswith((".", "_")))
+    return frozenset(out)
+
+
+# Budget of one content generation's decoded postings row groups, in Arrow
+# bytes (_PostingsReader.cache). The BM25 columns of a 6k-doc, 50k-term
+# index decode to ~4 MB in all; a cluster-layout shard file is a single row
+# group of tens of MB, so this holds a few of those.
+_ROW_GROUP_CACHE_BYTES = 64 << 20
+
+# fixed-width posting columns of a packed per-term entry; the others
+# (doc_deltas, tfs, positions) are binary
+_FIXED_COLS = {"shard": np.int32, "block_id": np.int32,
+               "block_max_score": np.float64}
+_ENTRY_DTYPES: dict = {}  # column set → _pack_rows record dtype
+
+
+def _binary_parts(arr) -> tuple:
+    """(offsets, data) NumPy views of an Arrow binary/string array's
+    buffers — value i is data[offsets[i]:offsets[i + 1]]."""
+    import pyarrow as pa
+
+    bufs = arr.buffers()
+    wide = (pa.types.is_large_binary(arr.type)
+            or pa.types.is_large_string(arr.type))
+    offs = np.frombuffer(bufs[1], dtype=np.int64 if wide else np.int32)
+    offs = offs[arr.offset:arr.offset + len(arr) + 1]
+    data = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+            else np.zeros(0, dtype=np.uint8))
+    return offs, data
+
+
+def _term_sorted(term) -> bool:
+    """Whether a dictionary-encoded term chunk is in term order: codes never
+    decrease and the dictionary itself is sorted (a term-sorted parquet
+    chunk decodes that way — its dictionary lists terms by first use)."""
+    import pyarrow.compute as pc
+
+    codes = term.indices.to_numpy()
+    words = term.dictionary
+    return bool(np.all(codes[1:] >= codes[:-1])) and (
+        len(words) < 2
+        or bool(pc.all(pc.less(words[:-1], words[1:])).as_py()))
+
+
+class _RowGroup:
+    """One decoded postings row group, in term order: a term's rows are ONE
+    contiguous range, found by a binary search of the row group's term
+    dictionary. It keeps the posting columns as Arrow buffers with NumPy
+    views, and the dictionary as one bytes object plus two integer arrays
+    (each word's offset in it and its first row) — no Python object per row
+    or per term."""
+
+    __slots__ = ("shard", "nbytes", "fixed", "binary", "_words", "_offs",
+                 "_starts", "_tbl")
+
+    def __init__(self, tbl, shard: int):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        term = tbl.column("term")
+        if not (term.num_chunks == 1 and _term_sorted(term.chunk(0))):
+            # not written term-sorted (purge's postings rewrite promises no
+            # row order): sort once here, re-encoding the terms so the
+            # dictionary follows the row order
+            i = tbl.schema.get_field_index("term")
+            tbl = tbl.set_column(i, "term", pc.cast(term, pa.string()))
+            tbl = tbl.combine_chunks().sort_by("term")
+            tbl = tbl.set_column(i, "term", pc.dictionary_encode(
+                tbl.column("term").combine_chunks()))
+        term = tbl.column("term").combine_chunks()
+        offs, data = _binary_parts(term.dictionary)
+        self._offs = array(offs.dtype.char, (offs - offs[0]).tobytes())
+        self._words = data[offs[0]:offs[-1]].tobytes()
+        # word i's rows are [starts[i], starts[i + 1]): codes never decrease
+        self._starts = array("q", np.searchsorted(
+            term.indices.to_numpy(), np.arange(len(offs)),
+        ).astype(np.int64).tobytes())
+        self._tbl = tbl = tbl.drop_columns(["term"]).combine_chunks()
+        self.shard = shard
+        self.nbytes = (tbl.nbytes + len(self._words)
+                       + self._offs.itemsize * len(self._offs)
+                       + self._starts.itemsize * len(self._starts))
+        self.fixed, self.binary = {}, {}
+        for c in tbl.column_names:
+            if c in _FIXED_COLS:
+                self.fixed[c] = tbl.column(c).chunk(0).to_numpy()
+            else:
+                self.binary[c] = _binary_parts(tbl.column(c).chunk(0))
+
+    def _word(self, i: int) -> bytes:
+        return self._words[self._offs[i]:self._offs[i + 1]]
+
+    def span(self, term: bytes) -> "tuple[int, int] | None":
+        """→ [lo, hi) row range of ``term`` (UTF-8), None when absent."""
+        n = len(self._offs) - 1
+        i = bisect_left(range(n), term, key=self._word)
+        if i == n or self._word(i) != term:
+            return None
+        lo, hi = self._starts[i], self._starts[i + 1]
+        return (lo, hi) if hi > lo else None
+
+
+def _pack_rows(pieces: list, cols: tuple) -> tuple:
+    """One term's rows, copied out of its row groups' ``pieces`` [(group,
+    lo, hi)], as a compact (record array, blob) pair — the per-term cache
+    entry. The record array holds the fixed-width columns and, per binary
+    column, each value's end offset in ``blob``; the binary columns' values
+    lie in ``blob`` column after column. Copies, not slices: an entry must
+    not keep its row group alive after the row-group cache drops it."""
+    dtype = _ENTRY_DTYPES.get(cols)
+    if dtype is None:  # one shared dtype per column set, not one per entry
+        dtype = _ENTRY_DTYPES[cols] = np.dtype(
+            [(c, _FIXED_COLS.get(c, np.int64)) for c in cols[1:]])
+    rec = np.empty(sum(hi - lo for _g, lo, hi in pieces), dtype=dtype)
+    blob: list = []
+    end = 0
+    for c in cols[1:]:
+        r = 0
+        for g, lo, hi in pieces:
+            m = hi - lo
+            if c == "shard":
+                rec[c][r:r + m] = g.shard
+            elif c in _FIXED_COLS:
+                rec[c][r:r + m] = g.fixed[c][lo:hi]
+            else:
+                offs, data = g.binary[c]
+                rec[c][r:r + m] = offs[lo + 1:hi + 1] - offs[lo] + end
+                end += int(offs[hi] - offs[lo])
+                blob.append(data[offs[lo]:offs[hi]])
+            r += m
+    return rec, b"".join(blob)
+
+
+def _unpack_rows(entry: tuple, term: str, cols: tuple, out: dict) -> None:
+    """Append a _pack_rows entry to the column lists ``out``."""
+    rec, blob = entry
+    if not len(rec):
+        return
+    out["term"].extend([term] * len(rec))
+    start = 0
+    for c in cols[1:]:
+        if c in _FIXED_COLS:
+            out[c].extend(rec[c].tolist())
+            continue
+        col = out[c]
+        for e in rec[c].tolist():
+            col.append(blob[start:e])
+            start = e
+
+
+class _PostingsReader:
+    """The postings read path of one content generation. A lazily built
+    row-group directory (from the parquet footers: file, row group, shard,
+    term min/max — only the owned shards' files) picks the row groups whose
+    term range can hold a term; each is decoded at most once while it stays
+    in ``cache``, a _BoundedLRU bounded to _ROW_GROUP_CACHE_BYTES of decoded
+    Arrow bytes (a row group larger than that is decoded for its read and
+    not kept). Thread-safe: the directory build is idempotent and the cache
+    locks."""
+
+    def __init__(self, dataset, owned):
+        self._dataset = dataset
+        self._owned = owned
+        self._groups = None
+        self.cache = _BoundedLRU(_ROW_GROUP_CACHE_BYTES,
+                                 sizeof=lambda g: g.nbytes)
+
+    def _directory(self) -> list:
+        groups = self._groups
+        if groups is None:
+            import pyarrow.dataset as ds
+
+            groups = []
+            for frag in self._dataset.get_fragments():
+                shard = int(ds.get_partition_keys(
+                    frag.partition_expression)["shard"])
+                if self._owned is not None and shard not in self._owned:
+                    continue
+                md = frag.metadata
+                col = [md.schema.column(i).path
+                       for i in range(md.num_columns)].index("term")
+                for rg in range(md.num_row_groups):
+                    meta = md.row_group(rg)
+                    if not meta.num_rows:
+                        continue
+                    st = meta.column(col).statistics
+                    lo, hi = ((st.min, st.max)
+                              if st is not None and st.has_min_max
+                              else (None, None))
+                    groups.append((frag, md, shard, rg, lo, hi))
+            self._groups = groups
+        return groups
+
+    def _group(self, frag, md, shard: int, rg: int, cols: tuple) -> _RowGroup:
+        key = (frag.path, rg, cols)
+        g = self.cache.get(key)
+        if g is None:
+            import pyarrow.parquet as pq
+
+            with frag.filesystem.open_input_file(frag.path) as f:
+                tbl = pq.ParquetFile(
+                    f, metadata=md, read_dictionary=["term"],
+                ).read_row_group(rg, columns=[c for c in cols if c != "shard"])
+            g = _RowGroup(tbl, shard)
+            if g.nbytes <= self.cache.maxsize:
+                self.cache[key] = g
+        return g
+
+    def rows(self, terms: list, cols: tuple) -> dict:
+        """→ {term: _pack_rows entry} for sorted, distinct ``terms`` (an
+        absent term gets an empty entry)."""
+        pieces: dict[str, list] = {t: [] for t in terms}
+        for frag, md, shard, rg, lo, hi in self._directory():
+            a = 0 if lo is None else bisect_left(terms, lo)
+            b = len(terms) if hi is None else bisect_right(terms, hi)
+            if a >= b:
+                continue
+            g = self._group(frag, md, shard, rg, cols)
+            for t in terms[a:b]:
+                span = g.span(t.encode())
+                if span is not None:
+                    pieces[t].append((g, *span))
+        return {t: _pack_rows(p, cols) for t, p in pieces.items()}
+
+
 class IndexServer:
     """Serve top-k queries from an on-disk index directory (plans/build.py
-    layout). Loads stats + doc lengths once; posting blocks are read per query
-    with predicate pushdown (optionally memoized via ``cache_terms``)."""
+    layout). Loads stats + doc lengths once. Posting rows come from the
+    term-sorted postings files through a per-generation reader
+    (_PostingsReader): a row-group directory read from the parquet footers,
+    row groups decoded at most once while a bytes-bounded LRU keeps them,
+    and a term's rows found by a dictionary lookup; a bounded per-term LRU
+    (``cache_terms``, ``max_cached_terms``) sits in front of it — see
+    _load_terms. State is per generation: refresh() swaps it atomically and
+    every batch runs on a snapshot (_snap)."""
 
     def __init__(self, index_dir: str, cfg: IndexConfig | None = None,
                  cache_terms: bool = True, max_cached_terms: int = 65536,
@@ -173,51 +444,51 @@ class IndexServer:
         # entry point (one tiny parquet read) instead of relying on explicit
         # refresh() calls — the opt-in always-fresh mode
         self.auto_refresh = auto_refresh
-        self.__dict__.update(self._read_state())
+        from bloqsenjin_spark.plans.build import read_index_meta_row
+
+        self.__dict__.update(self._read_state(read_index_meta_row(index_dir)))
 
     # attributes derived from index CONTENT (postings, term_stats, doc_lens,
     # corpus_stats, layout): unchanged while content_generation is, so a
     # tombstone-only refresh carries them over — the caches included, since
     # they hold decodes from before any tombstone mask is applied
     _CONTENT_STATE = (
-        "cfg", "_postings", "_ts_ds", "n_docs", "avgdl", "idf", "df",
+        "cfg", "_postings_reader", "_ts_ds", "n_docs", "avgdl", "idf", "df",
         "_stats_lru", "dls", "_term_cache", "_pos_term_cache",
         "_block_cache", "_score_block_cache", "_match_block_cache",
         "_fuzzy_idx",
     )
 
-    def _read_state(self, prev: "dict | None" = None) -> dict:
+    def _read_state(self, meta: "dict | None",
+                    prev: "dict | None" = None) -> dict:
         """Load every generation-dependent attribute into a dict — applied
         with ONE __dict__.update so refresh() swaps the whole state (stats,
-        doc_lens, tombstones, caches) atomically under the GIL. ``prev``
-        (the current state): when its content_generation is still current,
-        the _CONTENT_STATE attributes are reused as they are and only the
-        tombstone masks are re-read. Per-BATCH consistency comes from
-        _snap(): every public batch method runs on a shallow copy that pins
-        this state for its duration, so a concurrent refresh can never tear
-        an in-flight batch across generations."""
+        doc_lens, tombstones, caches) atomically under the GIL. ``meta``: the
+        index_meta row (plans.build.read_index_meta_row), read by the caller
+        BEFORE any table — a writer committing mid-load makes this snapshot
+        look older than it is, so the next refresh() reloads (conservative,
+        never stale-forever). ``prev`` (the current state): when its
+        content_generation is still current, the _CONTENT_STATE attributes
+        are reused as they are and only the tombstone files it has not read
+        are read. Per-BATCH consistency comes from _snap(): every public
+        batch method runs on a shallow copy that pins this state for its
+        duration, so a concurrent refresh can never tear an in-flight batch
+        across generations."""
         import pyarrow.dataset as ds
 
-        from bloqsenjin_spark.plans.build import (
-            read_index_content_generation,
-            read_index_generation,
-        )
+        from bloqsenjin_spark.plans.build import meta_generations
 
-        index_dir = self.index_dir
         st: dict = {"_ds": ds}
-        # generation read FIRST: a writer committing mid-load makes this
-        # snapshot look older than it is, so the next refresh() reloads —
-        # conservative, never stale-forever
-        st["generation"] = read_index_generation(index_dir)
         # content stamp gates the opt-in replicas (doc store, fuzzy
         # buckets): a replica built before the last CONTENT mutation must
         # not silently serve old rows (_doc_store_ds / _fuzzy_handle)
-        st["content_generation"] = read_index_content_generation(index_dir)
+        st["generation"], st["content_generation"] = meta_generations(meta)
         if prev is not None and (
                 prev["content_generation"] == st["content_generation"]):
             st.update((k, prev[k]) for k in self._CONTENT_STATE)
         else:
-            st.update(self._read_content(ds))
+            st.update(self._read_content(ds, meta))
+            prev = None  # new content: the tombstone log is read afresh
         # replica dataset handles (doc store, fuzzy buckets, facets, IVF),
         # lazily opened ONCE per generation — replica writes bump only the
         # generation, so even a tombstone-only refresh drops them. A shared
@@ -226,10 +497,11 @@ class IndexServer:
         # re-staleness-check parquet on every batch; mutating this dict
         # persists to the parent (same mechanism as the LRU caches)
         st["_replica_handles"] = {}
-        st["tomb_masks"] = self._read_tomb_masks(ds, st["cfg"].docs_per_shard)
+        st["tomb_masks"], st["_tomb_files"] = self._read_tomb_masks(
+            st["cfg"].docs_per_shard, prev)
         return st
 
-    def _read_content(self, ds) -> dict:
+    def _read_content(self, ds, meta: "dict | None") -> dict:
         """The _CONTENT_STATE attributes, read from the index files."""
         from collections import OrderedDict
 
@@ -237,9 +509,13 @@ class IndexServer:
 
         index_dir = self.index_dir
         st: dict = {}
-        st["cfg"] = check_index_meta(index_dir, self._cfg_arg)
-        st["_postings"] = ds.dataset(f"{index_dir}/postings", format="parquet",
-                                     partitioning="hive")
+        st["cfg"] = check_index_meta(index_dir, self._cfg_arg, meta)
+        # the file list is fixed here, with the rest of this generation's
+        # state; footers and row groups are read on the first term miss
+        st["_postings_reader"] = _PostingsReader(
+            ds.dataset(f"{index_dir}/postings", format="parquet",
+                       partitioning="hive"),
+            self._owned)
         cs = ds.dataset(f"{index_dir}/corpus_stats", format="parquet").to_table().to_pydict()
         st["n_docs"] = int(cs["n_docs"][0])
         st["avgdl"] = float(cs["avgdl"][0])
@@ -271,8 +547,10 @@ class IndexServer:
         # plus decoded positional blocks reused across phrase_batch calls.
         # Rebuilt empty when the content changes: cached rows belong to the
         # old bytes.
-        st["_term_cache"] = OrderedDict() if self._cache_terms else None
-        st["_pos_term_cache"] = OrderedDict() if self._cache_terms else None
+        st["_term_cache"] = (_BoundedLRU(self.max_cached_terms)
+                             if self._cache_terms else None)
+        st["_pos_term_cache"] = (_BoundedLRU(self.max_cached_terms)
+                                 if self._cache_terms else None)
         st["_block_cache"] = OrderedDict()
         st["_score_block_cache"] = _BoundedLRU(self.max_cached_score_blocks)
         # match-core twin (bare doc-id arrays for count/facet batches) —
@@ -285,27 +563,41 @@ class IndexServer:
         st["_fuzzy_idx"] = {}
         return st
 
-    def _read_tomb_masks(self, ds, dps: int) -> "dict[int, np.ndarray]":
+    def _read_tomb_masks(self, dps: int, prev: "dict | None" = None) -> tuple:
         """Logical deletes (LSM tombstones) — per-SHARD boolean masks, the
         serving-side form of plans.deletes.tombstone_bitmap_df: a server
         owning a doc-range slice holds only its own shards' masks (same
-        bound as its doc_lens arrays), masked before top-k selection."""
-        try:
-            tds = ds.dataset(f"{self.index_dir}/tombstones", format="parquet")
-        except FileNotFoundError:
-            return {}
-        if "doc_id" not in tds.schema.names:
-            return {}  # nothing but hidden (in-flight or leftover) files
-        ids = np.unique(
-            tds.to_table(columns=["doc_id"]).column("doc_id").to_numpy())
-        masks: dict[int, np.ndarray] = {}
+        bound as its doc_lens arrays), masked before top-k selection.
+        → (masks, frozenset of the tombstone files read).
+
+        The log is append-only, one file per delete: with ``prev`` (a state
+        of the same content) only the files it has not read are read, and
+        their ids are ORed into COPIES of the affected shards' masks, so
+        in-flight snapshots keep their own. A file ``prev`` read that has
+        disappeared (the log was rewritten) forces a full read."""
+        import pyarrow.parquet as pq
+
+        root = f"{self.index_dir}/tombstones"
+        names = _data_files(root)
+        masks, seen = {}, frozenset()
+        if prev is not None and prev["_tomb_files"] <= names:
+            masks, seen = prev["tomb_masks"], prev["_tomb_files"]
+        new = sorted(names - seen)
+        if not new:
+            return masks, seen
+        ids = np.unique(np.concatenate([
+            pq.read_table(os.path.join(root, n), columns=["doc_id"])
+            .column("doc_id").to_numpy() for n in new
+        ]))
+        masks = dict(masks)
         for s in np.unique(ids // dps):
             if self._owned is not None and int(s) not in self._owned:
                 continue
-            m = np.zeros(dps, dtype=bool)
+            m = masks.get(int(s))
+            m = np.zeros(dps, dtype=bool) if m is None else m.copy()
             m[ids[ids // dps == s] - s * dps] = True
             masks[int(s)] = m
-        return masks
+        return masks, names
 
     def refresh(self, force: bool = False) -> bool:
         """Pick up a new index generation (build resume, streaming compact,
@@ -313,15 +605,20 @@ class IndexServer:
         generation read; on change, reload in a single atomic state swap.
         Returns True iff a reload happened.
 
-        What a reload reads depends on what changed. When the index CONTENT
-        is unchanged (same content_generation: a logical delete, or an
-        opt-in replica write), the refresh re-reads only the tombstone
-        masks and drops the replica handles; config, dataset handles,
-        corpus stats, the idf/df dicts or lazy stats LRU, doc lengths and
-        every decoded-block/term cache carry over — tombstones are applied
-        after the cache lookups, and scores keep their build-time stats
-        until a purge. A content change (build, resume, purge, compact, IVF
-        append) reloads everything with fresh caches, and so does
+        The index_meta row is read ONCE per call: it carries both stamps
+        and the layout. What a reload reads depends on what changed. When
+        the index CONTENT is unchanged (same content_generation: a logical
+        delete, or an opt-in replica write), the refresh lists the
+        append-only tombstone log, reads only the files it has not read
+        yet (ORing their ids into copies of the affected shards' masks; a
+        file it read that has disappeared forces a full read) and drops
+        the replica handles; config, dataset handles, corpus stats, the
+        idf/df dicts or lazy stats LRU, doc lengths, the decoded postings
+        row groups and every decoded-block/term cache carry over —
+        tombstones are applied after the cache lookups, and scores keep
+        their build-time stats until a purge. A content change (build,
+        resume, purge, compact, IVF append) reloads everything with fresh
+        caches and reads the whole tombstone log, and so does
         ``force=True``.
 
         Until refresh() is called the server keeps serving its loaded
@@ -331,12 +628,16 @@ class IndexServer:
         reads since the old files are gone). This is the non-pathological
         version of the reference's re-init-per-request
         (/root/reference/pkg/rest/http/server.go:16-35)."""
-        from bloqsenjin_spark.plans.build import read_index_generation
+        from bloqsenjin_spark.plans.build import (
+            meta_generations,
+            read_index_meta_row,
+        )
 
-        if not force and read_index_generation(self.index_dir) == self.generation:
+        meta = read_index_meta_row(self.index_dir)
+        if not force and meta_generations(meta)[0] == self.generation:
             return False
         self.__dict__.update(
-            self._read_state(None if force else self.__dict__))
+            self._read_state(meta, None if force else self.__dict__))
         return True
 
     def _snap(self) -> "IndexServer":
@@ -389,37 +690,36 @@ class IndexServer:
         return got
 
     def _load_terms(self, terms: list[str], positional: bool = False) -> dict:
-        """term-filtered block rows → column arrays, via a bounded per-term
-        LRU (separate caches for the BM25 and positional column sets)."""
+        """The posting rows of ``terms`` (the owned shards') → column lists
+        {column: [value per row]} for _BM25_COLS, or _POS_COLS when
+        ``positional``.
+
+        Two caches, both per content generation (a tombstone-only refresh
+        keeps them): the per-term LRU of the column set (``cache_terms``;
+        ``max_cached_terms`` entries) holds each term's rows, copied out as
+        one compact record array plus one bytes blob; its misses go to
+        _PostingsReader, whose LRU keeps decoded row groups up to
+        _ROW_GROUP_CACHE_BYTES. The per-term LRU stays in front because at
+        cluster layouts a shard file is one row group of tens of MB and a
+        query fans out to every shard: the byte budget alone would
+        re-decode a hot term's row groups on every query."""
         cache = self._pos_term_cache if positional else self._term_cache
         cols = self._POS_COLS if positional else self._BM25_COLS
-        if cache is None and not terms:
-            return {k: [] for k in cols}
-        need = [t for t in terms if cache is None or t not in cache]
+        got: dict = {}
+        for t in dict.fromkeys(terms):
+            entry = cache.get(t) if cache is not None else None
+            if entry is not None:
+                got[t] = entry
+        need = sorted(t for t in dict.fromkeys(terms) if t not in got)
         if need:
-            flt = _term_filter(need)
-            if self._owned is not None:
-                flt = flt & self._ds.field("shard").isin(sorted(self._owned))
-            tbl = self._postings.to_table(
-                filter=flt, columns=list(cols)
-            ).to_pydict()
-            if cache is None:
-                return tbl
-            by_term: dict[str, dict] = {t: {k: [] for k in tbl} for t in need}
-            for i, t in enumerate(tbl["term"]):
-                for k in tbl:
-                    by_term[t][k].append(tbl[k][i])
-            for t in need:
-                cache[t] = by_term.get(t, {k: [] for k in tbl})
+            fetched = self._postings_reader.rows(need, cols)
+            got.update(fetched)
+            if cache is not None:
+                for t, entry in fetched.items():
+                    cache[t] = entry
         merged: dict[str, list] = {k: [] for k in cols}
         for t in terms:
-            part = cache.get(t)
-            if part is not None:
-                cache.move_to_end(t)
-                for k in merged:
-                    merged[k].extend(part[k])
-        while len(cache) > self.max_cached_terms:
-            cache.popitem(last=False)
+            _unpack_rows(got[t], t, cols, merged)
         return merged
 
     def _stats_for(self, terms) -> dict:

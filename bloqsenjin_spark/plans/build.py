@@ -248,10 +248,11 @@ def write_fuzzy_index(
 
 
 _META_FILE = "part-00000.parquet"  # the parquet backend's one meta file
+_UNREAD = object()  # "meta row not read yet" (a None row means no meta)
 
 
 def write_index_meta(spark: SparkSession, index_dir: str, cfg: IndexConfig,
-                     content: bool = True) -> None:
+                     content: bool = True, prev=_UNREAD) -> None:
     """Persist the layout-defining config WITH the index: decoding with a
     different docs_per_shard/block_docs silently corrupts docIDs, so readers
     load (or validate against) this row instead of trusting their caller.
@@ -291,10 +292,14 @@ def write_index_meta(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     every LSM/segment store requires of its commit log). Readers read the
     generation BEFORE the tables (see IndexServer._read_state: a mid-load
     commit makes the snapshot look older, forcing a re-refresh —
-    conservative, never stale-forever)."""
-    gen = read_index_generation(index_dir) + 1
-    content_gen = gen if content else read_index_content_generation(index_dir)
+    conservative, never stale-forever).
+
+    ``prev``: the meta row as it was before this write, when the caller has
+    already read it (read_index_meta_row) — a parquet-path write then reads
+    nothing; otherwise it reads the row once."""
     if index_dir.startswith(S.ICEBERG_SCHEME):
+        gen = read_index_generation(index_dir) + 1
+        content_gen = gen if content else read_index_content_generation(index_dir)
         S.for_index(spark, index_dir).overwrite(
             spark.createDataFrame(
                 [(cfg.docs_per_shard, cfg.block_docs, cfg.k1, cfg.b,
@@ -310,6 +315,11 @@ def write_index_meta(spark: SparkSession, index_dir: str, cfg: IndexConfig,
 
     import pyarrow as pa
 
+    gen, content_gen = meta_generations(
+        read_index_meta_row(index_dir) if prev is _UNREAD else prev)
+    gen += 1
+    if content:
+        content_gen = gen
     row = pa.table({
         "docs_per_shard": pa.array([cfg.docs_per_shard], pa.int32()),
         "block_docs": pa.array([cfg.block_docs], pa.int32()),
@@ -342,19 +352,7 @@ def read_index_content_generation(index_dir: str) -> int:
             return int(r["content_generation"])
         except Exception:  # noqa: BLE001 — no meta / legacy schema
             return read_index_generation(index_dir)
-    import pyarrow.dataset as ds
-
-    try:
-        row = ds.dataset(
-            f"{index_dir}/index_meta", format="parquet"
-        ).to_table().to_pydict()
-    except FileNotFoundError:
-        return 0
-    cg = row.get("content_generation")
-    if cg:
-        return int(cg[0])
-    gens = row.get("generation")
-    return int(gens[0]) if gens else 0
+    return meta_generations(read_index_meta_row(index_dir))[1]
 
 
 def write_facet_index(
@@ -539,16 +537,49 @@ def read_index_generation(index_dir: str) -> int:
             return int(r["generation"])
         except Exception:  # noqa: BLE001 — pre-generation meta
             return 0
+    return meta_generations(read_index_meta_row(index_dir))[0]
+
+
+def read_index_meta_row(index_dir: str) -> "dict | None":
+    """The meta row of a parquet-path index as {column: value}, or None when
+    the index has no meta yet: ONE session-free read that carries the
+    generation stamps and the layout alike, so a caller that needs several
+    of them (IndexServer.refresh, delete_docs) reads the file once and
+    passes the row on (meta_generations, meta_config, check_index_meta,
+    write_index_meta)."""
     import pyarrow.dataset as ds
 
     try:
-        row = ds.dataset(
+        rows = ds.dataset(
             f"{index_dir}/index_meta", format="parquet"
-        ).to_table().to_pydict()
+        ).to_table().to_pylist()
     except FileNotFoundError:
-        return 0
-    gens = row.get("generation")
-    return int(gens[0]) if gens else 0
+        return None
+    return rows[0] if rows else None
+
+
+def meta_generations(row: "dict | None") -> tuple[int, int]:
+    """(generation, content_generation) of a meta row: (0, 0) without a
+    row, generation 0 for a pre-generation row, and content_generation =
+    generation for a row written before the content stamp existed."""
+    if not row:
+        return 0, 0
+    gen = int(row.get("generation") or 0)
+    cg = row.get("content_generation")
+    return gen, gen if cg is None else int(cg)
+
+
+def meta_config(row: "dict | None", index_dir: str) -> IndexConfig:
+    """The stored IndexConfig of a meta row; FileNotFoundError without one."""
+    if not row:
+        raise FileNotFoundError(f"{index_dir}/index_meta: no index meta row")
+    return IndexConfig(
+        k1=float(row["k1"]), b=float(row["b"]),
+        docs_per_shard=int(row["docs_per_shard"]),
+        block_docs=int(row["block_docs"]),
+        # pre-positional index_meta lacks the column: those builds have none
+        positions=bool(row.get("positions") or False),
+    )
 
 
 def read_index_meta(index_dir: str) -> IndexConfig:
@@ -570,24 +601,19 @@ def read_index_meta(index_dir: str) -> IndexConfig:
             block_docs=int(r["block_docs"]),
             positions=bool(r["positions"]),
         )
-    import pyarrow.dataset as ds
-
-    row = ds.dataset(f"{index_dir}/index_meta", format="parquet").to_table().to_pydict()
-    return IndexConfig(
-        k1=float(row["k1"][0]), b=float(row["b"][0]),
-        docs_per_shard=int(row["docs_per_shard"][0]),
-        block_docs=int(row["block_docs"][0]),
-        # pre-positional index_meta lacks the column: those builds have none
-        positions=bool(row.get("positions", [False])[0]),
-    )
+    return meta_config(read_index_meta_row(index_dir), index_dir)
 
 
-def check_index_meta(index_dir: str, cfg: IndexConfig) -> IndexConfig:
-    """cfg=None → stored config; explicit cfg must match the stored layout."""
+def check_index_meta(index_dir: str, cfg: IndexConfig,
+                     row=_UNREAD) -> IndexConfig:
+    """cfg=None → stored config; explicit cfg must match the stored layout.
+    ``row``: the parquet meta row (read_index_meta_row) when the caller has
+    already read it — None means the index has no meta."""
     from pyspark.errors import AnalysisException
 
     try:
-        stored = read_index_meta(index_dir)
+        stored = (read_index_meta(index_dir) if row is _UNREAD
+                  else meta_config(row, index_dir))
     except FileNotFoundError:
         if cfg is None:
             raise

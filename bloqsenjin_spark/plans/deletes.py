@@ -37,7 +37,11 @@ from bloqsenjin_spark.functions.codec import (
     varint_encode,
 )
 from bloqsenjin_spark.operators.merge import merge_postings
-from bloqsenjin_spark.plans.build import check_index_meta, write_index_meta
+from bloqsenjin_spark.plans.build import (
+    check_index_meta,
+    read_index_meta_row,
+    write_index_meta,
+)
 
 
 def _parquet_only(index_dir: str) -> None:
@@ -77,7 +81,8 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> None
     Starts no Spark job: the ids land as ONE new parquet file in
     ``tombstones/`` (``doc_id int64``, the column every Spark reader of the
     log expects), committed atomically by plans.store.commit_parquet_file,
-    and the meta stamp is write_index_meta's session-free parquet commit.
+    and the meta stamp is write_index_meta's session-free parquet commit,
+    from ONE read of the meta row (layout check and generation bump).
     An empty ``doc_ids`` writes nothing and bumps nothing; a bool,
     non-integer or negative id raises ValueError before any write."""
     import uuid
@@ -94,14 +99,15 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> None
         pa.table({"doc_id": pa.array(ids, pa.int64())}),
         f"{index_dir}/tombstones", f"part-{uuid.uuid4().hex}.parquet",
     )
-    try:
-        # content=False: tombstones mask at query time in every path (incl.
-        # snippet/fuzzy serving), so opt-in replicas stay valid — only
-        # physical rewrites (purge/rebuild) advance content_generation
-        write_index_meta(spark, index_dir, check_index_meta(index_dir, None),
-                         content=False)
-    except FileNotFoundError:
-        pass  # pre-meta index: nothing to stamp
+    # ONE meta read serves the layout check and the generation bump
+    row = read_index_meta_row(index_dir)
+    if row is None:
+        return  # pre-meta index: nothing to stamp
+    # content=False: tombstones mask at query time in every path (incl.
+    # snippet/fuzzy serving), so opt-in replicas stay valid — only
+    # physical rewrites (purge/rebuild) advance content_generation
+    write_index_meta(spark, index_dir, check_index_meta(index_dir, None, row),
+                     content=False, prev=row)
 
 
 def load_tombstones(spark: SparkSession, index_dir: str) -> set[int]:

@@ -397,13 +397,16 @@ def test_refresh_after_delete_reuses_content_state(spark, built, stats_mode):
     before = _all_answers(srv)
     assert len(srv._score_block_cache) > 0
     kept = (srv.idf, srv._stats_lru, srv.dls, srv._score_block_cache,
-            srv._match_block_cache, srv._term_cache)
+            srv._match_block_cache, srv._term_cache,
+            srv._postings_reader.cache)
+    assert len(kept[-1]) > 0  # decoded row groups
 
     D.delete_docs(spark, d, DELETED)
     assert srv.refresh()
     assert all(a is b for a, b in zip(
         (srv.idf, srv._stats_lru, srv.dls, srv._score_block_cache,
-         srv._match_block_cache, srv._term_cache), kept))
+         srv._match_block_cache, srv._term_cache,
+         srv._postings_reader.cache), kept))
     after = _all_answers(srv)
     assert after != before
     assert after == _all_answers(IndexServer(d, stats_mode=stats_mode))
@@ -413,8 +416,112 @@ def test_refresh_after_delete_reuses_content_state(spark, built, stats_mode):
     assert srv.refresh()
     assert srv.dls is not kept[2]
     assert srv._score_block_cache is not kept[3]
+    assert srv._postings_reader.cache is not kept[-1]
     if stats_mode == "eager":
         assert srv.idf is not kept[0]
     else:
         assert srv._stats_lru is not kept[1]
     assert _all_answers(srv) == _all_answers(IndexServer(d, stats_mode=stats_mode))
+
+
+def _tomb_reads(monkeypatch) -> list:
+    """Paths of the tombstone files the server reads from now on."""
+    import pyarrow.parquet as pq
+
+    reads: list = []
+    real = pq.read_table
+
+    def counted(source, *a, **kw):
+        if "tombstones" in str(source):
+            reads.append(str(source))
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", counted)
+    return reads
+
+
+def _same_masks(a: dict, b: dict) -> bool:
+    return a.keys() == b.keys() and all(
+        np.array_equal(a[s], b[s]) for s in a)
+
+
+def test_refresh_reads_only_new_tombstone_files(spark, built, monkeypatch):
+    """After N deletes, the next delete's refresh reads exactly its one new
+    tombstone file (a leftover temp file is never read), and the masks
+    equal a fresh server's; in-flight snapshots keep their own masks."""
+    import os
+
+    d, _ = built
+    os.makedirs(f"{d}/tombstones")
+    with open(f"{d}/tombstones/.tmp-dead.parquet", "wb") as f:
+        f.write(b"not parquet: a writer died before the rename")
+    srv = IndexServer(d)
+    for doc in DELETED[:-1]:
+        D.delete_docs(spark, d, [doc])
+        assert srv.refresh()
+    before = srv._snap()
+    old_masks = {s: m.copy() for s, m in before.tomb_masks.items()}
+    reads = _tomb_reads(monkeypatch)
+    D.delete_docs(spark, d, [DELETED[-1], 131])  # 131: already deleted
+    assert srv.refresh()
+    new = sorted(set(os.listdir(f"{d}/tombstones"))
+                 - {os.path.basename(p) for p in before._tomb_files}
+                 - {".tmp-dead.parquet"})
+    assert len(new) == 1
+    assert [os.path.basename(p) for p in reads] == new
+    assert _same_masks(srv.tomb_masks, IndexServer(d).tomb_masks)
+    assert _same_masks(before.tomb_masks, old_masks)
+    assert _all_answers(srv) == _all_answers(IndexServer(d))
+
+
+def test_removed_tombstone_file_forces_full_read(spark, built, monkeypatch):
+    """A tombstone file the server has read that is gone from the log makes
+    the next refresh read the whole log again: its ids stop masking."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    d, _ = built
+    srv = IndexServer(d)
+    D.delete_docs(spark, d, DELETED[:3])
+    srv.refresh()
+    D.delete_docs(spark, d, DELETED[3:5])
+    srv.refresh()
+    first = next(
+        f for f in os.listdir(f"{d}/tombstones")
+        if pq.read_table(f"{d}/tombstones/{f}").column(
+            "doc_id").to_pylist() == DELETED[:3])
+    os.remove(f"{d}/tombstones/{first}")
+    reads = _tomb_reads(monkeypatch)
+    D.delete_docs(spark, d, DELETED[5:])
+    assert srv.refresh()
+    assert len(reads) == 2  # the surviving earlier file and the new one
+    masked = {int(x) for s, m in srv.tomb_masks.items()
+              for x in np.flatnonzero(m) + s * CFG.docs_per_shard}
+    assert masked == set(DELETED[3:])
+    assert _same_masks(srv.tomb_masks, IndexServer(d).tomb_masks)
+
+
+def test_refresh_and_delete_read_index_meta_once(spark, built, monkeypatch):
+    """refresh() and delete_docs each read the index_meta row once."""
+    import pyarrow.dataset as ds
+
+    d, _ = built
+    srv = IndexServer(d)
+    reads: list = []
+    real = ds.dataset
+
+    def counted(source, *a, **kw):
+        if str(source).rstrip("/").endswith("index_meta"):
+            reads.append(source)
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(ds, "dataset", counted)
+    D.delete_docs(spark, d, DELETED)
+    assert len(reads) == 1
+    reads.clear()
+    assert srv.refresh()
+    assert len(reads) == 1
+    reads.clear()
+    assert not srv.refresh()  # nothing new: still one read
+    assert len(reads) == 1

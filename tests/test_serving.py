@@ -5,12 +5,13 @@ from __future__ import annotations
 import sys
 import threading
 import time
+from collections import Counter
 
 import pytest
 
 from bloqsenjin_spark import corpus
 from bloqsenjin_spark.config import IndexConfig
-from bloqsenjin_spark.operators import topk, wand
+from bloqsenjin_spark.operators import serving, topk, wand
 from bloqsenjin_spark.operators.serving import IndexServer, _BoundedLRU
 from bloqsenjin_spark.plans import build as B
 
@@ -78,16 +79,37 @@ def test_serving_latency_and_cache(spark, index_dir):
     assert per_batch < 0.5, f"serving too slow: {per_batch:.3f}s/batch"
 
 
-def test_serving_caches_are_lru_bounded(spark, index_dir):
+def test_serving_caches_are_lru_bounded(spark, index_dir, monkeypatch):
     """A long-lived server over a many-distinct-term query stream must not
-    grow its caches without bound — and eviction must not change results."""
-    srv = IndexServer(index_dir, CFG, max_cached_terms=4)
+    grow its caches without bound — and eviction must not change results.
+    The decoded row-group cache keeps its decoded bytes under its budget."""
+    import pyarrow.parquet as pq
+
     ref = IndexServer(index_dir, CFG, cache_terms=False)
-    vocab = sorted(srv.idf)  # every indexed term, >> cache cap
+    vocab = sorted(ref.idf)  # every indexed term, >> cache cap
     assert len(vocab) > 8
+    ref._load_terms(vocab)
+    sizes = sorted(g.nbytes for g in ref._postings_reader.cache.values())
+    n_groups = len(ref._postings_reader._directory())
+    assert len(sizes) == n_groups >= 3
+    budget = 2 * sizes[-1]  # room for two row groups
+    monkeypatch.setattr(serving, "_ROW_GROUP_CACHE_BYTES", budget)
+    reads: list = []
+    real = pq.ParquetFile.read_row_group
+
+    def counted(self, *a, **kw):
+        reads.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted)
+    srv = IndexServer(index_dir, CFG, max_cached_terms=4)
+    rg_cache = srv._postings_reader.cache
     for t in vocab:  # stream of distinct single-term queries
         assert srv.query([t], k=3) == ref.query([t], k=3)
         assert len(srv._term_cache) <= 4
+        assert rg_cache.size == sum(g.nbytes for g in rg_cache.values())
+        assert 0 < rg_cache.size <= budget
+    assert len(reads) > n_groups  # evicted row groups were decoded again
     # re-querying an evicted term still answers correctly (reload path)
     assert srv.query([vocab[0]], k=3) == ref.query([vocab[0]], k=3)
 
@@ -1234,10 +1256,10 @@ def test_lazy_edge_cases_from_review(spark, index_dir):
     assert lazy._replica_handles["fuzzy"][0] is h1  # not re-opened
 
 
-def test_bounded_lru_threads_share_keys_without_errors():
-    """Many threads hitting the same keys: a lost race is a miss, never a
-    KeyError or a dict-changed-size error, and every hit is the key's value."""
-    cache = _BoundedLRU(8)
+def _hammer_lru(cache: _BoundedLRU) -> None:
+    """Twelve threads get-or-set the same 16 keys of ``cache``: a lost race
+    is a miss, never a KeyError or a dict-changed-size error, and every hit
+    is the key's value."""
     errors: list[BaseException] = []
     bad_hits: list[tuple] = []
 
@@ -1269,6 +1291,22 @@ def test_bounded_lru_threads_share_keys_without_errors():
     assert len(cache) <= cache.maxsize + len(threads)
 
 
+def test_bounded_lru_threads_share_keys_without_errors():
+    _hammer_lru(_BoundedLRU(8))
+
+
+def test_bounded_lru_with_sizes_stays_exact_under_threads():
+    """With a size function the summed size stays exact and within bound
+    while threads race on the same keys."""
+    def sizeof(v):
+        return 1 + v % 3
+
+    cache = _BoundedLRU(8, sizeof=sizeof)
+    _hammer_lru(cache)
+    assert cache.size == sum(sizeof(v) for v in cache.values())
+    assert cache.size <= cache.maxsize
+
+
 def test_term_filter_prunes_row_groups(tmp_path):
     """``term IN (...)`` alone keeps every row group of a term-sorted file
     (pyarrow prunes on comparisons only); the serving reads' filter adds the
@@ -1290,3 +1328,97 @@ def test_term_filter_prunes_row_groups(tmp_path):
     assert len(frag.split_by_row_group(_term_filter(want))) == 3
     got = frag.to_table(filter=_term_filter(want)).to_pydict()
     assert got["term"] == ["t00300", "t00301", "t00700"]
+
+
+def _scan_rows(index_dir, terms, shards=None):
+    """Multiset of the postings rows of ``terms`` from a filtered dataset
+    scan — the reference for the serving reader."""
+    import pyarrow.dataset as ds
+
+    flt = ds.field("term").isin(terms)
+    if shards is not None:
+        flt = flt & ds.field("shard").isin(sorted(shards))
+    tbl = ds.dataset(f"{index_dir}/postings", format="parquet",
+                     partitioning="hive").to_table(
+        filter=flt, columns=list(IndexServer._BM25_COLS)).to_pydict()
+    return Counter(zip(*(tbl[c] for c in IndexServer._BM25_COLS)))
+
+
+def _served_rows(srv, terms):
+    got = srv._load_terms(sorted(terms))
+    return Counter(zip(*(got[c] for c in IndexServer._BM25_COLS)))
+
+
+def _rewrite_postings(index_dir, dst, **write_kw):
+    """Copy an index, rewriting every postings file with pyarrow (same
+    rows; ``order`` reorders them, ``write_kw`` go to pq.write_table)."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.copytree(index_dir, dst)
+    order = write_kw.pop("order", None)
+    for f in glob.glob(f"{dst}/postings/shard=*/*.parquet"):
+        tbl = pq.ParquetFile(f).read()
+        if order is not None:
+            tbl = tbl.take(order(tbl.num_rows))
+        pq.write_table(tbl, f, **write_kw)
+    return dst
+
+
+@pytest.mark.parametrize("case", ["small_row_groups", "unsorted", "slice"])
+def test_load_terms_equals_filtered_scan(index_dir, tmp_path, case):
+    """The row-group reader returns, for every term, the same rows as a
+    filtered scan of the postings dataset: on small row groups (the
+    directory prunes), on files written out of term order, and on a
+    shards= slice."""
+    import numpy as np
+
+    shards = None
+    d = index_dir
+    if case == "small_row_groups":
+        d = _rewrite_postings(index_dir, str(tmp_path / "idx"),
+                              row_group_size=16)
+    elif case == "unsorted":
+        rng = np.random.default_rng(5)
+        d = _rewrite_postings(index_dir, str(tmp_path / "idx"),
+                              order=rng.permutation)
+    else:
+        shards = {1, 2}
+    srv = IndexServer(d, CFG, shards=shards)
+    vocab = sorted(srv.idf)
+    for terms in [vocab] + [vocab[i::5] + ["zebra"] for i in range(5)]:
+        assert _served_rows(srv, terms) == _scan_rows(d, terms, shards)
+    for t in vocab:  # single-term misses on a cold server
+        one = IndexServer(d, CFG, shards=shards)
+        assert _served_rows(one, [t]) == _scan_rows(d, [t], shards)
+    if case == "small_row_groups":
+        groups = srv._postings_reader._directory()
+        assert len(groups) > 4 * len(srv.dls)
+        one = IndexServer(d, CFG)
+        one._load_terms(["customer"])
+        assert 0 < len(one._postings_reader.cache) < len(groups) / 4
+
+
+def test_row_group_decoded_once_while_cached(index_dir, monkeypatch):
+    """A term miss that lands in row groups already decoded reads no
+    parquet: counted on ParquetFile.read_row_group."""
+    import pyarrow.parquet as pq
+
+    reads: list = []
+    real = pq.ParquetFile.read_row_group
+
+    def counted(self, *a, **kw):
+        reads.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted)
+    srv = IndexServer(index_dir, CFG, cache_terms=False)  # every call misses
+    want = _served_rows(srv, ["customer", "order"])
+    assert len(reads) > 0
+    n = len(reads)
+    assert _served_rows(srv, ["customer", "order"]) == want
+    assert _served_rows(srv, ["order"]) + _served_rows(
+        srv, ["customer"]) == want
+    assert len(reads) == n
