@@ -31,6 +31,30 @@ def _check_boosts(queries: list) -> None:
                 )
 
 
+def _block_decoder(shard: int, deltas_col, tfs_col=None,
+                   decode_cache: "dict | None" = None):
+    """One shard's block decode step, shared by the three kernels →
+    ``decode(key, block_id, row, block_base)``: the block's doc ids, or
+    (doc_ids, tfs float64) when a ``tfs_col`` is given. Decodes go through
+    ``decode_cache`` (cross-call, keyed (key, shard, block_id)) when one is
+    passed, else through a call-local memo with the same keys. Cached
+    arrays are never mutated by a kernel, so sharing them is safe."""
+    cache = {} if decode_cache is None else decode_cache
+
+    def decode(key, bi: int, row: int, block_base: int):
+        ck = (key, shard, bi)
+        got = cache.get(ck)
+        if got is None:
+            got = delta_decode(bytes(deltas_col[row]), base=block_base)
+            if tfs_col is not None:
+                got = (got, varint_decode(bytes(tfs_col[row])).astype(
+                    np.float64))
+            cache[ck] = got
+        return got
+
+    return decode
+
+
 def score_shard_blocks(
     shard: int,
     terms_col: np.ndarray,
@@ -81,10 +105,8 @@ def score_shard_blocks(
     (term, shard, block_id) → (doc_ids, tfs float64) — the serving tier's
     decoded-block LRU (the BM25 twin of IndexServer._decode_pos_block's
     positional cache; round-9 follow-up — decode was 40-60 % of a warm
-    1M-doc batch profile). The cached arrays are never mutated by the
-    kernel (every consumer derives new arrays), so sharing is safe. The
-    distributed path passes None (task workers are stateless) and keeps
-    the call-local row memo below.
+    1M-doc batch profile). See _block_decoder. The distributed path passes
+    None (task workers are stateless) and keeps a call-local memo.
     """
     dps, bdocs = cfg.docs_per_shard, cfg.block_docs
     k1, b = cfg.k1, cfg.b
@@ -104,25 +126,7 @@ def score_shard_blocks(
         term_blocks.setdefault(t, {})[int(bids[i])] = i
         term_bmax.setdefault(t, {})[int(bids[i])] = float(bmax_col[i])
 
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def block_postings(t, bi: int, row_idx: int, block_base: int):
-        if decode_cache is not None:
-            ck = (t, shard, bi)
-            got = decode_cache.get(ck)
-            if got is None:
-                ids = delta_decode(bytes(deltas_col[row_idx]),
-                                   base=block_base)
-                tfs = varint_decode(bytes(tfs_col[row_idx])).astype(
-                    np.float64)
-                got = decode_cache[ck] = (ids, tfs)
-            return got
-        got = decoded.get(row_idx)
-        if got is None:
-            ids = delta_decode(bytes(deltas_col[row_idx]), base=block_base)
-            tfs = varint_decode(bytes(tfs_col[row_idx])).astype(np.float64)
-            got = decoded[row_idx] = (ids, tfs)
-        return got
+    block_postings = _block_decoder(shard, deltas_col, tfs_col, decode_cache)
 
     out_q: list[np.ndarray] = []
     out_d: list[np.ndarray] = []
@@ -319,27 +323,9 @@ def score_shard_blocks_bm25f(
             k1 * m / max((k1 + 1.0) - m, 1e-300)
         )
 
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def block_postings(key, bi: int, row_idx: int, block_base: int):
-        # same cross-call decode LRU as score_shard_blocks — composite
-        # field⟂term keys make entries unique per field replica
-        if decode_cache is not None:
-            ck = (key, shard, bi)
-            got = decode_cache.get(ck)
-            if got is None:
-                ids = delta_decode(bytes(deltas_col[row_idx]),
-                                   base=block_base)
-                tfs = varint_decode(bytes(tfs_col[row_idx])).astype(
-                    np.float64)
-                got = decode_cache[ck] = (ids, tfs)
-            return got
-        got = decoded.get(row_idx)
-        if got is None:
-            ids = delta_decode(bytes(deltas_col[row_idx]), base=block_base)
-            tfs = varint_decode(bytes(tfs_col[row_idx])).astype(np.float64)
-            got = decoded[row_idx] = (ids, tfs)
-        return got
+    # same cross-call decode LRU as score_shard_blocks — composite
+    # field⟂term keys make entries unique per field replica
+    block_postings = _block_decoder(shard, deltas_col, tfs_col, decode_cache)
 
     def sat(x: np.ndarray) -> np.ndarray:
         return (k1 + 1.0) * x / (x + k1)
@@ -483,29 +469,13 @@ def _iter_shard_matches(
     shard_base = shard * dps
 
     term_blocks: dict[str, dict[int, int]] = {}
-    term_of_row: dict[int, str] = {}
     for i in range(len(terms_col)):
         term_blocks.setdefault(terms_col[i], {})[int(bids[i])] = i
-        term_of_row[i] = terms_col[i]
 
-    decoded: dict[int, np.ndarray] = {}
+    block_ids = _block_decoder(shard, deltas_col, decode_cache=decode_cache)
 
-    def ids_of(row_idx: int, block_base: int) -> np.ndarray:
-        if decode_cache is not None:
-            bi = (block_base - shard_base) // bdocs
-            ck = (term_of_row[row_idx], shard, bi)
-            got = decode_cache.get(ck)
-            if got is None:
-                got = decode_cache[ck] = delta_decode(
-                    bytes(deltas_col[row_idx]), base=block_base
-                )
-            return got
-        got = decoded.get(row_idx)
-        if got is None:
-            got = decoded[row_idx] = delta_decode(
-                bytes(deltas_col[row_idx]), base=block_base
-            )
-        return got
+    def ids_of(t, bi: int, block_base: int) -> np.ndarray:
+        return block_ids(t, bi, term_blocks[t][bi], block_base)
 
     for q in queries:
         qid, terms, mode, _k = q[:4]
@@ -526,26 +496,23 @@ def _iter_shard_matches(
         for bi in sorted(cand):
             block_base = shard_base + bi * bdocs
             if conj:  # a doc's postings all live in its one block
-                ids = ids_of(term_blocks[present[0]][bi], block_base)
+                ids = ids_of(present[0], bi, block_base)
                 for t in present[1:]:
                     if ids.size == 0:
                         break
-                    ids = np.intersect1d(
-                        ids, ids_of(term_blocks[t][bi], block_base),
-                        assume_unique=True,
-                    )
+                    ids = np.intersect1d(ids, ids_of(t, bi, block_base),
+                                         assume_unique=True)
             else:
                 parts = [
-                    ids_of(term_blocks[t][bi], block_base)
+                    ids_of(t, bi, block_base)
                     for t in present if bi in term_blocks[t]
                 ]
                 ids = np.unique(np.concatenate(parts))
             for nt in negs:
                 if ids.size == 0:
                     break
-                ri = term_blocks.get(nt, {}).get(bi)
-                if ri is not None:
-                    ids = np.setdiff1d(ids, ids_of(ri, block_base),
+                if bi in term_blocks.get(nt, ()):
+                    ids = np.setdiff1d(ids, ids_of(nt, bi, block_base),
                                        assume_unique=True)
             if tomb_mask is not None and ids.size:
                 ids = ids[~tomb_mask[ids - shard_base]]

@@ -25,7 +25,6 @@ import os
 import threading
 from array import array
 from bisect import bisect_left, bisect_right
-from itertools import islice
 
 import numpy as np
 
@@ -64,67 +63,51 @@ _MISSING = object()
 
 
 class _BoundedLRU(dict):
-    """Minimal bounded LRU for the serving caches (the scorer's and match
-    core's decoded blocks, per-term posting rows, decoded row groups): plain
-    dict get/set semantics (what functions.scoring.score_shard_blocks
-    expects of its ``decode_cache``), recency tracked by re-insertion,
-    eviction on insert. Shared MUTABLY by _snap() copies (a snapshot warming
-    the cache warms the server — same generation, same bytes).
+    """The one bounded LRU of the serving tier — every cache in this module
+    is one: decoded blocks (scorer, match core, positional), per-term
+    posting rows, lazy (df, idf) stats and decoded row groups. Plain dict
+    get/set semantics (what functions.scoring's ``decode_cache`` expects),
+    recency tracked by re-insertion, eviction on insert.
 
-    ``sizeof``: optional entry → cost function (e.g. decoded bytes); the
-    cache then keeps the summed cost of its entries, ``size``, at most
-    ``maxsize`` instead of counting entries. That mode serves few, large
-    entries (decoded row groups, read once per term-cache miss), so it
-    takes a lock and keeps ``size`` exact."""
+    Concurrency model: get and set each hold the cache's lock, so threads
+    may share one cache — a lost race is a miss, never an error. A cache is
+    scoped to one content generation and shared by reference by every
+    _snap() copy of that generation (a snapshot warming it warms the
+    server); a content change binds new caches instead of clearing these.
 
-    def __init__(self, maxsize: int, sizeof=None):
+    ``size`` is the exact summed cost of the entries, kept at most
+    ``maxsize``; ``sizeof`` (entry → cost) defaults to 1, i.e. counting
+    entries. An entry costing more than ``maxsize`` by itself is not
+    stored."""
+
+    def __init__(self, maxsize: int, sizeof=lambda _v: 1):
         super().__init__()
         self.maxsize = maxsize
         self._sizeof = sizeof
         self.size = 0
-        self._lock = threading.Lock() if sizeof is not None else None
+        self._lock = threading.Lock()
 
     def get(self, key, default=None):
-        if self._lock is not None:
-            with self._lock:
-                return self._get(key, default)
-        return self._get(key, default)
-
-    def _get(self, key, default):
-        # dicts preserve insertion order: re-insert = mark recently used.
-        # pop + re-insert rather than get + del: a thread that loses the race
-        # for the same key sees a miss instead of a KeyError, with no lock
-        # on this per-block path.
-        got = self.pop(key, _MISSING)
-        if got is _MISSING:
-            return default
-        super().__setitem__(key, got)
-        return got
+        with self._lock:
+            # dicts keep insertion order: re-insert = mark recently used
+            got = self.pop(key, _MISSING)
+            if got is _MISSING:
+                return default
+            super().__setitem__(key, got)
+            return got
 
     def __setitem__(self, key, value):
-        if self._lock is not None:
-            with self._lock:
-                old = self.pop(key, _MISSING)
-                if old is not _MISSING:
-                    self.size -= self._sizeof(old)
-                super().__setitem__(key, value)
-                self.size += self._sizeof(value)
-                while self.size > self.maxsize:
-                    self.size -= self._sizeof(self.pop(next(iter(self))))
+        cost = self._sizeof(value)
+        if cost > self.maxsize:
             return
-        super().__setitem__(key, value)
-        excess = len(self) - self.maxsize
-        if excess > 0:
-            # evict oldest entries (front of insertion order), lock-free: if
-            # another thread resizes the dict during this pass, this insert
-            # evicts nothing and the next one catches up; pop() tolerates a
-            # key another thread removed first
-            try:
-                oldest = list(islice(self, excess))
-            except RuntimeError:
-                return
-            for k in oldest:
-                self.pop(k, None)
+        with self._lock:
+            old = self.pop(key, _MISSING)
+            if old is not _MISSING:
+                self.size -= self._sizeof(old)
+            super().__setitem__(key, value)
+            self.size += cost
+            while self.size > self.maxsize:
+                self.size -= self._sizeof(self.pop(next(iter(self))))
 
 
 def _bounded(cache: "_BoundedLRU", n_rows: int):
@@ -162,11 +145,22 @@ def _data_files(root: str) -> frozenset:
     return frozenset(out)
 
 
-# Budget of one content generation's decoded postings row groups, in Arrow
-# bytes (_PostingsReader.cache). The BM25 columns of a 6k-doc, 50k-term
-# index decode to ~4 MB in all; a cluster-layout shard file is a single row
-# group of tens of MB, so this holds a few of those.
+# Bounds of one content generation's caches, read when its state is built.
+# Decoded postings row groups, in Arrow bytes (_PostingsReader.cache): the
+# BM25 columns of a 6k-doc, 50k-term index decode to ~4 MB in all; a
+# cluster-layout shard file is a single row group of tens of MB, so this
+# holds a few of those.
 _ROW_GROUP_CACHE_BYTES = 64 << 20
+# Entries: per-term posting rows (per column set) and lazy (df, idf) stats.
+_TERM_CACHE_ENTRIES = 65536
+# Entries: decoded positional blocks (_decode_pos_block).
+_POS_BLOCK_CACHE_ENTRIES = 8192
+# Entries: decoded BM25 blocks (scorer) and doc-id blocks (match core), one
+# cache each. ≤ 16 B × block_docs per entry ⇒ ≤ 512 MB worst case at
+# block_docs=512, typically tens of MB (sparse blocks); sized so a
+# 12-head-term batch over ~1M docs (≈ 39k block rows) fits — a batch with
+# more block rows than this bypasses the cache (_bounded).
+_SCORE_BLOCK_CACHE_ENTRIES = 65536
 
 # fixed-width posting columns of a packed per-term entry; the others
 # (doc_deltas, tfs, positions) are binary
@@ -362,9 +356,7 @@ class _PostingsReader:
                 tbl = pq.ParquetFile(
                     f, metadata=md, read_dictionary=["term"],
                 ).read_row_group(rg, columns=[c for c in cols if c != "shard"])
-            g = _RowGroup(tbl, shard)
-            if g.nbytes <= self.cache.maxsize:
-                self.cache[key] = g
+            g = self.cache[key] = _RowGroup(tbl, shard)
         return g
 
     def rows(self, terms: list, cols: tuple) -> dict:
@@ -390,17 +382,20 @@ class IndexServer:
     term-sorted postings files through a per-generation reader
     (_PostingsReader): a row-group directory read from the parquet footers,
     row groups decoded at most once while a bytes-bounded LRU keeps them,
-    and a term's rows found by a dictionary lookup; a bounded per-term LRU
-    (``cache_terms``, ``max_cached_terms``) sits in front of it — see
-    _load_terms. State is per generation: refresh() swaps it atomically and
-    every batch runs on a snapshot (_snap)."""
+    and a term's rows found by a dictionary lookup; a per-term LRU sits in
+    front of it — see _load_terms.
+
+    Concurrency model: state is per generation. refresh() swaps it
+    atomically and every batch runs on a snapshot (_snap), so batches may
+    run in threads beside each other and beside refresh(). Every cache is a
+    locked _BoundedLRU, scoped to one content generation and shared by
+    reference by that generation's snapshots; its bound is a module
+    constant (_TERM_CACHE_ENTRIES, _POS_BLOCK_CACHE_ENTRIES,
+    _SCORE_BLOCK_CACHE_ENTRIES, _ROW_GROUP_CACHE_BYTES)."""
 
     def __init__(self, index_dir: str, cfg: IndexConfig | None = None,
-                 cache_terms: bool = True, max_cached_terms: int = 65536,
-                 max_cached_blocks: int = 8192, auto_refresh: bool = False,
-                 shards=None, stats_mode: str = "eager",
-                 allow_fuzzy_scan: bool = False,
-                 max_cached_score_blocks: int = 65536):
+                 auto_refresh: bool = False, shards=None,
+                 stats_mode: str = "eager", allow_fuzzy_scan: bool = False):
         if stats_mode not in ("eager", "lazy"):
             raise ValueError(f"stats_mode must be 'eager' or 'lazy', got {stats_mode!r}")
         # allow_fuzzy_scan: opt-in escape hatch for lazy-mode fuzzy queries
@@ -411,7 +406,6 @@ class IndexServer:
         self.allow_fuzzy_scan = allow_fuzzy_scan
         self.index_dir = index_dir
         self._cfg_arg = cfg
-        self._cache_terms = cache_terms
         # stats_mode='lazy': do NOT load the term→idf/df dictionaries — per
         # batch, the needed terms are read from the term-sorted term_stats
         # parquet (row-group-pruned) through a bounded LRU, and fuzzy
@@ -428,18 +422,6 @@ class IndexServer:
         # every global winner wins its own slice).
         self._owned = (frozenset(int(x) for x in shards)
                        if shards is not None else None)
-        self.max_cached_terms = max_cached_terms
-        self.max_cached_blocks = max_cached_blocks
-        # decoded (doc_ids, tfs) BM25 block LRU shared across query batches
-        # (the scorer twin of the positional _block_cache; round-9
-        # follow-up: decode was 40-60 % of a warm 1M-doc batch profile).
-        # Bound: ≤ 16 B × block_docs per entry ⇒ default ≤ 512 MB worst
-        # case at block_docs=512, typically tens of MB (sparse blocks);
-        # sized so a 12-head-term batch over ~1M docs stays under the cap
-        # (≈ 39k block rows) — batches whose row count exceeds the cap
-        # BYPASS the cache entirely (see _bounded) instead of scan-
-        # thrashing it
-        self.max_cached_score_blocks = max_cached_score_blocks
         # auto_refresh: poll the generation stamp at the start of every batch
         # entry point (one tiny parquet read) instead of relying on explicit
         # refresh() calls — the opt-in always-fresh mode
@@ -503,8 +485,6 @@ class IndexServer:
 
     def _read_content(self, ds, meta: "dict | None") -> dict:
         """The _CONTENT_STATE attributes, read from the index files."""
-        from collections import OrderedDict
-
         from bloqsenjin_spark.plans.build import check_index_meta
 
         index_dir = self.index_dir
@@ -532,7 +512,7 @@ class IndexServer:
             # a bounded LRU backed by row-group-pruned term_stats reads
             st["idf"] = None
             st["df"] = None
-            st["_stats_lru"] = OrderedDict()
+            st["_stats_lru"] = _BoundedLRU(_TERM_CACHE_ENTRIES)
         dl = ds.dataset(f"{index_dir}/doc_lens", format="parquet",
                         partitioning="hive").to_table().to_pydict()
         owned = self._owned
@@ -544,18 +524,15 @@ class IndexServer:
         # LRU caches, bounded so a long-lived server over a web-scale
         # vocabulary can't grow without limit: per-term posting rows for the
         # BM25 path and (separately, positional columns) for the phrase path,
-        # plus decoded positional blocks reused across phrase_batch calls.
-        # Rebuilt empty when the content changes: cached rows belong to the
-        # old bytes.
-        st["_term_cache"] = (_BoundedLRU(self.max_cached_terms)
-                             if self._cache_terms else None)
-        st["_pos_term_cache"] = (_BoundedLRU(self.max_cached_terms)
-                                 if self._cache_terms else None)
-        st["_block_cache"] = OrderedDict()
-        st["_score_block_cache"] = _BoundedLRU(self.max_cached_score_blocks)
-        # match-core twin (bare doc-id arrays for count/facet batches) —
-        # a separate mapping from the scorer's (ids, tfs) entries
-        st["_match_block_cache"] = _BoundedLRU(self.max_cached_score_blocks)
+        # decoded positional blocks reused across phrase_batch calls, and
+        # decoded BM25 blocks (scorer) and doc-id blocks (count/facet match
+        # core) reused across query batches. Rebuilt empty when the content
+        # changes: cached rows belong to the old bytes.
+        st["_term_cache"] = _BoundedLRU(_TERM_CACHE_ENTRIES)
+        st["_pos_term_cache"] = _BoundedLRU(_TERM_CACHE_ENTRIES)
+        st["_block_cache"] = _BoundedLRU(_POS_BLOCK_CACHE_ENTRIES)
+        st["_score_block_cache"] = _BoundedLRU(_SCORE_BLOCK_CACHE_ENTRIES)
+        st["_match_block_cache"] = _BoundedLRU(_SCORE_BLOCK_CACHE_ENTRIES)
         # SymSpell deletion-neighborhood indexes over the eager df dict,
         # built lazily per distinct max_dist on first fuzzy query (shared
         # by snapshots; derived from the dictionary alone, so they live as
@@ -683,10 +660,6 @@ class IndexServer:
             flat = segmented_delta_decode(bytes(tbl["positions"][i]), tfs)
             offs = np.concatenate(([0], np.cumsum(tfs)))
             got = self._block_cache[key] = (ids, flat, offs)
-            while len(self._block_cache) > self.max_cached_blocks:
-                self._block_cache.popitem(last=False)
-        else:
-            self._block_cache.move_to_end(key)
         return got
 
     def _load_terms(self, terms: list[str], positional: bool = False) -> dict:
@@ -695,9 +668,9 @@ class IndexServer:
         ``positional``.
 
         Two caches, both per content generation (a tombstone-only refresh
-        keeps them): the per-term LRU of the column set (``cache_terms``;
-        ``max_cached_terms`` entries) holds each term's rows, copied out as
-        one compact record array plus one bytes blob; its misses go to
+        keeps them): the per-term LRU of the column set (_TERM_CACHE_ENTRIES
+        entries) holds each term's rows, copied out as one compact record
+        array plus one bytes blob; its misses go to
         _PostingsReader, whose LRU keeps decoded row groups up to
         _ROW_GROUP_CACHE_BYTES. The per-term LRU stays in front because at
         cluster layouts a shard file is one row group of tens of MB and a
@@ -707,16 +680,15 @@ class IndexServer:
         cols = self._POS_COLS if positional else self._BM25_COLS
         got: dict = {}
         for t in dict.fromkeys(terms):
-            entry = cache.get(t) if cache is not None else None
+            entry = cache.get(t)
             if entry is not None:
                 got[t] = entry
         need = sorted(t for t in dict.fromkeys(terms) if t not in got)
         if need:
             fetched = self._postings_reader.rows(need, cols)
             got.update(fetched)
-            if cache is not None:
-                for t, entry in fetched.items():
-                    cache[t] = entry
+            for t, entry in fetched.items():
+                cache[t] = entry
         merged: dict[str, list] = {k: [] for k in cols}
         for t in terms:
             _unpack_rows(got[t], t, cols, merged)
@@ -726,9 +698,10 @@ class IndexServer:
         """→ {term: (df, idf)} for the requested terms (absent vocabulary
         terms omitted). Eager mode: dict lookups. Lazy mode: bounded LRU +
         ONE row-group-pruned pyarrow read for the misses (term_stats is
-        term-sorted parquet) — resident stats stay O(max_cached_terms)
+        term-sorted parquet) — resident stats stay O(_TERM_CACHE_ENTRIES)
         regardless of vocabulary size. Known-absent terms are cached as None
-        so repeated misses don't re-read."""
+        so repeated misses don't re-read. Only get and item assignment touch
+        the LRU, which then bounds itself."""
         if self.df is not None:
             return {
                 t: (self.df[t], self.idf[t]) for t in terms if t in self.df
@@ -737,12 +710,11 @@ class IndexServer:
         out: dict = {}
         need: list[str] = []
         for t in dict.fromkeys(terms):
-            if t in lru:
-                lru.move_to_end(t)
-                if lru[t] is not None:
-                    out[t] = lru[t]
-            else:
+            got = lru.get(t, _MISSING)
+            if got is _MISSING:
                 need.append(t)
+            elif got is not None:
+                out[t] = got
         if need:
             tbl = self._ts_ds.to_table(
                 filter=_term_filter(need),
@@ -751,10 +723,8 @@ class IndexServer:
             for t, dfv, idfv in zip(tbl["term"], tbl["df"], tbl["idf"]):
                 out[t] = lru[t] = (int(dfv), float(idfv))
             for t in need:
-                if t not in lru:
+                if t not in out:
                     lru[t] = None  # negative-cache absent terms
-            while len(lru) > self.max_cached_terms:
-                lru.popitem(last=False)
         return out
 
     def _idf_for(self, terms) -> dict:
@@ -2150,8 +2120,8 @@ class FieldedIndexServer:
         # decoded-block LRU across fielded batches (keys are composite
         # field⟂term, so entries are unique per field replica), bound to
         # the per-field content_generation tuple it was filled under
-        self._score_cache = (self._content_key(self.servers), _BoundedLRU(
-            self.servers[self.fields[0]].max_cached_score_blocks))
+        self._score_cache = (self._content_key(self.servers),
+                             _BoundedLRU(_SCORE_BLOCK_CACHE_ENTRIES))
 
     _SEP = "\x00"  # same composite-key separator as operators/fielded.py
 
@@ -2169,7 +2139,7 @@ class FieldedIndexServer:
             out = self._doc_stats.refresh(force) or out
         if force:
             self._score_cache = (self._content_key(self.servers),
-                                 _BoundedLRU(self._score_block_cache.maxsize))
+                                 _BoundedLRU(_SCORE_BLOCK_CACHE_ENTRIES))
         return out
 
     def _content_key(self, servers) -> tuple:

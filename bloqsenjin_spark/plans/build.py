@@ -546,16 +546,28 @@ def read_index_meta_row(index_dir: str) -> "dict | None":
     generation stamps and the layout alike, so a caller that needs several
     of them (IndexServer.refresh, delete_docs) reads the file once and
     passes the row on (meta_generations, meta_config, check_index_meta,
-    write_index_meta)."""
-    import pyarrow.dataset as ds
+    write_index_meta).
 
+    The directory's files are read directly, in name order, skipping names
+    that start with "." or "_" (commit temp files, Spark's markers and
+    checksums): the first row of the first non-empty file, as a dataset
+    scan would return, without the cost of dataset discovery. A Spark-era
+    directory of several part files reads the same way."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    root = f"{index_dir}/index_meta"
     try:
-        rows = ds.dataset(
-            f"{index_dir}/index_meta", format="parquet"
-        ).to_table().to_pylist()
+        names = sorted(n for n in os.listdir(root)
+                       if not n.startswith((".", "_")))
     except FileNotFoundError:
         return None
-    return rows[0] if rows else None
+    for n in names:
+        rows = pq.ParquetFile(os.path.join(root, n)).read().to_pylist()
+        if rows:
+            return rows[0]
+    return None
 
 
 def meta_generations(row: "dict | None") -> tuple[int, int]:

@@ -503,20 +503,29 @@ def test_removed_tombstone_file_forces_full_read(spark, built, monkeypatch):
 
 
 def test_refresh_and_delete_read_index_meta_once(spark, built, monkeypatch):
-    """refresh() and delete_docs each read the index_meta row once."""
+    """refresh() and delete_docs each read the index_meta row once: counted
+    as dataset scans of index_meta/ plus opens of a file in it."""
     import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
     d, _ = built
     srv = IndexServer(d)
     reads: list = []
     real = ds.dataset
+    real_open = pq.ParquetFile.__init__
 
     def counted(source, *a, **kw):
         if str(source).rstrip("/").endswith("index_meta"):
             reads.append(source)
         return real(source, *a, **kw)
 
+    def counted_open(self, source, *a, **kw):
+        if "/index_meta/" in str(source):
+            reads.append(source)
+        real_open(self, source, *a, **kw)
+
     monkeypatch.setattr(ds, "dataset", counted)
+    monkeypatch.setattr(pq.ParquetFile, "__init__", counted_open)
     D.delete_docs(spark, d, DELETED)
     assert len(reads) == 1
     reads.clear()

@@ -85,7 +85,9 @@ def test_serving_caches_are_lru_bounded(spark, index_dir, monkeypatch):
     The decoded row-group cache keeps its decoded bytes under its budget."""
     import pyarrow.parquet as pq
 
-    ref = IndexServer(index_dir, CFG, cache_terms=False)
+    with monkeypatch.context() as m:  # no per-term cache
+        m.setattr(serving, "_TERM_CACHE_ENTRIES", 0)
+        ref = IndexServer(index_dir, CFG)
     vocab = sorted(ref.idf)  # every indexed term, >> cache cap
     assert len(vocab) > 8
     ref._load_terms(vocab)
@@ -102,7 +104,8 @@ def test_serving_caches_are_lru_bounded(spark, index_dir, monkeypatch):
         return real(self, *a, **kw)
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted)
-    srv = IndexServer(index_dir, CFG, max_cached_terms=4)
+    monkeypatch.setattr(serving, "_TERM_CACHE_ENTRIES", 4)
+    srv = IndexServer(index_dir, CFG)
     rg_cache = srv._postings_reader.cache
     for t in vocab:  # stream of distinct single-term queries
         assert srv.query([t], k=3) == ref.query([t], k=3)
@@ -114,14 +117,18 @@ def test_serving_caches_are_lru_bounded(spark, index_dir, monkeypatch):
     assert srv.query([vocab[0]], k=3) == ref.query([vocab[0]], k=3)
 
 
-def test_serving_score_block_cache_identity_and_bound(spark, index_dir):
+def test_serving_score_block_cache_identity_and_bound(spark, index_dir,
+                                                     monkeypatch):
     """Round-9 follow-up: the decoded-BM25-block LRU must (a) populate on
     first use and serve identical results on repeats and under eviction
     pressure, (b) stay bounded, (c) be dropped by refresh(force=True) —
     cached arrays belong to a generation."""
-    ref = IndexServer(index_dir, CFG, max_cached_score_blocks=0)
+    with monkeypatch.context() as m:
+        m.setattr(serving, "_SCORE_BLOCK_CACHE_ENTRIES", 0)
+        ref = IndexServer(index_dir, CFG)
+        m.setattr(serving, "_SCORE_BLOCK_CACHE_ENTRIES", 2)
+        tiny = IndexServer(index_dir, CFG)
     srv = IndexServer(index_dir, CFG)
-    tiny = IndexServer(index_dir, CFG, max_cached_score_blocks=2)
     want = ref.query_batch(corpus.REFERENCE_QUERIES)
     assert srv.query_batch(corpus.REFERENCE_QUERIES) == want
     assert len(srv._score_block_cache) > 0  # populated
@@ -147,7 +154,8 @@ def pos_index_dir(spark, tmp_path_factory):
     return d
 
 
-def test_serving_phrase_matches_spark_path(spark, pos_index_dir):
+def test_serving_phrase_matches_spark_path(spark, pos_index_dir,
+                                           monkeypatch):
     phrases = [(1, "the fast"), (2, "customer order"), (3, "zebra stripes"),
                (4, "The, FAST!")]
     idx = B.read_index(spark, pos_index_dir)
@@ -162,12 +170,13 @@ def test_serving_phrase_matches_spark_path(spark, pos_index_dir):
     # decoded positional blocks persist across calls (bounded LRU) and a
     # warm repeat is result-identical
     n_blocks = len(srv._block_cache)
-    assert 0 < n_blocks <= srv.max_cached_blocks
+    assert 0 < n_blocks <= serving._POS_BLOCK_CACHE_ENTRIES
     assert srv.phrase_batch(phrases) == want
     assert len(srv._block_cache) == n_blocks
 
     # tiny block-cache cap: still correct, never exceeds the cap
-    small = IndexServer(pos_index_dir, max_cached_blocks=2)
+    monkeypatch.setattr(serving, "_POS_BLOCK_CACHE_ENTRIES", 2)
+    small = IndexServer(pos_index_dir)
     assert small.phrase_batch(phrases) == want
     assert len(small._block_cache) <= 2
 
@@ -474,7 +483,8 @@ def test_serving_fuzzy_topk_matches_spark_path(spark, index_dir):
     assert not any(q == 4 for q, _, _, _ in got)
 
 
-def test_lazy_stats_mode_identical(spark, index_dir, pos_index_dir):
+def test_lazy_stats_mode_identical(spark, index_dir, pos_index_dir,
+                                  monkeypatch):
     """stats_mode='lazy' — NO vocabulary residency: per-batch row-group-
     pruned term_stats reads through a bounded LRU, prefix via a ranged read
     of the term-sorted files, fuzzy via the on-disk SymSpell bucket replica
@@ -503,7 +513,8 @@ def test_lazy_stats_mode_identical(spark, index_dir, pos_index_dir):
     assert (lp.phrase_topk_batch(phrases)
             == IndexServer(pos_index_dir).phrase_topk_batch(phrases))
     # residency is bounded by the LRU cap, not the vocabulary
-    small = IndexServer(index_dir, CFG, stats_mode="lazy", max_cached_terms=4)
+    monkeypatch.setattr(serving, "_TERM_CACHE_ENTRIES", 4)
+    small = IndexServer(index_dir, CFG, stats_mode="lazy")
     small.query_batch(corpus.REFERENCE_QUERIES)
     small.prefix_topk_batch(pq, max_expansions=4)
     assert len(small._stats_lru) <= 4
@@ -1256,29 +1267,22 @@ def test_lazy_edge_cases_from_review(spark, index_dir):
     assert lazy._replica_handles["fuzzy"][0] is h1  # not re-opened
 
 
-def _hammer_lru(cache: _BoundedLRU) -> None:
-    """Twelve threads get-or-set the same 16 keys of ``cache``: a lost race
-    is a miss, never a KeyError or a dict-changed-size error, and every hit
-    is the key's value."""
+def _in_threads(target, n: int) -> list:
+    """Run ``target(i)`` for i < n in n threads under a 1 µs switch
+    interval, so the threads interleave inside every cache operation →
+    the exceptions they raised."""
     errors: list[BaseException] = []
-    bad_hits: list[tuple] = []
 
-    def hammer(seed: int) -> None:
+    def run(i: int) -> None:
         try:
-            for i in range(20_000):
-                key = ("t", (i * 7 + seed) % 16, 0)
-                got = cache.get(key)
-                if got is None:
-                    cache[key] = key[1] * 10
-                elif got != key[1] * 10:
-                    bad_hits.append((key, got))
-        except BaseException as e:  # noqa: BLE001 — reported by the assert below
+            target(i)
+        except BaseException as e:  # noqa: BLE001 — returned to the caller
             errors.append(e)
 
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        threads = [threading.Thread(target=hammer, args=(s,)) for s in range(12)]
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
         for t in threads:
             t.start()
         for t in threads:
@@ -1286,13 +1290,33 @@ def _hammer_lru(cache: _BoundedLRU) -> None:
         assert not any(t.is_alive() for t in threads)
     finally:
         sys.setswitchinterval(old)
-    assert errors == []
+    return errors
+
+
+def _hammer_lru(cache: _BoundedLRU) -> None:
+    """Twelve threads get-or-set the same 16 keys of ``cache``: a lost race
+    is a miss, never a KeyError or a dict-changed-size error, and every hit
+    is the key's value."""
+    bad_hits: list[tuple] = []
+
+    def hammer(seed: int) -> None:
+        for i in range(20_000):
+            key = ("t", (i * 7 + seed) % 16, 0)
+            got = cache.get(key)
+            if got is None:
+                cache[key] = key[1] * 10
+            elif got != key[1] * 10:
+                bad_hits.append((key, got))
+
+    assert _in_threads(hammer, 12) == []
     assert bad_hits == []
-    assert len(cache) <= cache.maxsize + len(threads)
+    assert len(cache) <= cache.maxsize
 
 
 def test_bounded_lru_threads_share_keys_without_errors():
-    _hammer_lru(_BoundedLRU(8))
+    cache = _BoundedLRU(8)
+    _hammer_lru(cache)
+    assert cache.size == len(cache)
 
 
 def test_bounded_lru_with_sizes_stays_exact_under_threads():
@@ -1305,6 +1329,85 @@ def test_bounded_lru_with_sizes_stays_exact_under_threads():
     _hammer_lru(cache)
     assert cache.size == sum(sizeof(v) for v in cache.values())
     assert cache.size <= cache.maxsize
+
+
+def test_bounded_lru_counts_entries_and_skips_oversized():
+    """Without a size function every entry costs 1; an entry costing more
+    than the whole bound is not stored (a bound of 0 caches nothing)."""
+    lru = _BoundedLRU(2)
+    lru["a"], lru["b"] = 1, 2
+    assert lru.get("a") == 1  # a is now the most recent
+    lru["c"] = 3
+    assert list(lru) == ["a", "c"] and lru.size == 2
+    off = _BoundedLRU(0)
+    off["a"] = 1
+    assert off.get("a") is None and off.size == 0
+    by_len = _BoundedLRU(4, sizeof=len)
+    by_len["x"], by_len["y"] = "12345", "12"
+    assert "x" not in by_len and by_len.size == 2
+
+
+@pytest.mark.parametrize("cache", ["positional_blocks", "lazy_stats"])
+def test_concurrent_batches_share_lru_caches(index_dir, pos_index_dir,
+                                             monkeypatch, cache):
+    """Eight threads run batches on ONE server whose cache under test is
+    bounded to a few entries, so batches keep evicting what other batches
+    are reading: no thread raises, and every answer equals the
+    single-threaded one. Covers the positional-block cache (one-phrase
+    phrase_batch calls) and the lazy (df, idf) LRU (query_batch over the
+    reference queries, stats_mode="lazy")."""
+    if cache == "positional_blocks":
+        monkeypatch.setattr(serving, "_POS_BLOCK_CACHE_ENTRIES", 2)
+        srv = IndexServer(pos_index_dir)
+        run_batch = srv.phrase_batch
+        batches = [[(1, "the fast")], [(2, "customer order")],
+                   [(3, "zebra stripes")], [(4, "the customer")]]
+    else:
+        monkeypatch.setattr(serving, "_TERM_CACHE_ENTRIES", 4)
+        srv = IndexServer(index_dir, CFG, stats_mode="lazy")
+        run_batch = srv.query_batch
+        batches = [corpus.REFERENCE_QUERIES]
+    want = [run_batch(b) for b in batches]
+    assert any(want)
+    wrong: list = []
+
+    def run(i: int) -> None:
+        for r in range(20):
+            j = (i + r) % len(batches)
+            got = run_batch(batches[j])
+            if got != want[j]:
+                wrong.append((j, got))
+
+    assert _in_threads(run, 8) == []
+    assert wrong == []
+    lru = srv._block_cache if cache == "positional_blocks" else srv._stats_lru
+    assert 0 < len(lru) <= lru.maxsize
+
+
+def test_stats_for_runs_on_the_bench_shim(index_dir):
+    """bench.py measures lazy-stats residency on a server made with
+    IndexServer.__new__ and a bare OrderedDict as its stats LRU (and no
+    other cache attribute): _stats_for must keep answering there, with the
+    eager server's (df, idf) and absent terms negative-cached."""
+    from collections import OrderedDict
+
+    import pyarrow.dataset as pads
+
+    eager = IndexServer(index_dir, CFG)
+    terms = sorted(eager.df) + ["zebra"]
+    assert "zebra" not in eager.df
+    lshim = IndexServer.__new__(IndexServer)
+    lshim.df = lshim.idf = None
+    lshim.index_dir = index_dir
+    lshim._ds = pads
+    lshim._ts_ds = pads.dataset(f"{index_dir}/term_stats", format="parquet")
+    lshim._stats_lru = OrderedDict()
+    lshim._replica_handles = {}
+    lshim.max_cached_terms = 65536
+    want = {t: (eager.df[t], eager.idf[t]) for t in terms[:-1]}
+    assert lshim._stats_for(terms) == want
+    assert lshim._stats_lru["zebra"] is None
+    assert lshim._stats_for(terms) == want  # now served from the LRU
 
 
 def test_term_filter_prunes_row_groups(tmp_path):
@@ -1414,7 +1517,8 @@ def test_row_group_decoded_once_while_cached(index_dir, monkeypatch):
         return real(self, *a, **kw)
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted)
-    srv = IndexServer(index_dir, CFG, cache_terms=False)  # every call misses
+    monkeypatch.setattr(serving, "_TERM_CACHE_ENTRIES", 0)  # every call misses
+    srv = IndexServer(index_dir, CFG)
     want = _served_rows(srv, ["customer", "order"])
     assert len(reads) > 0
     n = len(reads)
